@@ -12,15 +12,23 @@ operators.maintenance and schema.ddl for the statements.
 Parquet fallback: hour-partition column `ts_hour=yyyy-MM-dd-HH`
 (exactly the reference's partition path, transformer/src/main.rs:
 961-965), append/overwrite writes, latest-wins merge emulation.
+
+File layout: every hour-partitioned write in the engine goes through
+`write_hours`, which lands ONE file per hour partition per commit — the
+reference's one Parquet file per (table, ts_hour) per batch (SURVEY.md
+S13). An hour larger than AQE's advisory partition size
+(`spark.sql.adaptive.advisoryPartitionSizeInBytes`) is split into
+several files of about that size, so a large backfill does not land one
+huge file either. Readers of a small table therefore open one file per
+hour per commit, not one per input partition per hour.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from matano_spark import hadoop_fs
 from matano_spark.operators.maintenance import iceberg_available
 from matano_spark.schema.ddl import create_table_ddl
 
@@ -38,6 +46,34 @@ def ts_hour_utc(col: F.Column | str) -> F.Column:
     return F.date_format(
         F.to_utc_timestamp(c, F.current_timezone()), TS_HOUR_FMT
     )
+
+
+def with_ts_hour(df: DataFrame, ts_col: str = "ts") -> DataFrame:
+    """`df` with its UTC hour key; a `ts_hour` already present is kept."""
+    if "ts_hour" in df.columns:
+        return df
+    return df.withColumn("ts_hour", ts_hour_utc(ts_col))
+
+
+def write_hours(
+    df: DataFrame,
+    path: str,
+    mode: str = "append",
+    ts_col: str = "ts",
+    replace_hours: bool = False,
+) -> None:
+    """Write `df` partitioned by `ts_hour`, one file per hour partition.
+
+    The rebalance hint shuffles rows by hour before the write. AQE then
+    coalesces a small commit's hours into few tasks, each writing one
+    file per hour it holds, and splits an hour above the advisory
+    partition size into several tasks (several files). With
+    `replace_hours`, an overwrite replaces only the hour partitions
+    present in `df` (dynamic partition overwrite)."""
+    writer = with_ts_hour(df, ts_col).hint("rebalance", "ts_hour").write.mode(mode)
+    if replace_hours:
+        writer = writer.option("partitionOverwriteMode", "dynamic")
+    writer.partitionBy("ts_hour").parquet(path)
 
 
 class LakeTable:
@@ -62,21 +98,22 @@ class LakeTable:
         return create_table_ddl(self.name, schema)
 
     # -- writes -------------------------------------------------------
-    def _with_partition(self, df: DataFrame) -> DataFrame:
-        if self.ts_col in df.columns and "ts_hour" not in df.columns:
-            return df.withColumn("ts_hour", ts_hour_utc(self.ts_col))
-        return df
-
     def append(self, df: DataFrame) -> None:
         if self.iceberg:
             df.writeTo(self.name).append()
             return
-        (
-            self._with_partition(df)
-            .write.mode("append")
-            .partitionBy("ts_hour")
-            .parquet(self.path)
+        write_hours(df, self.path, ts_col=self.ts_col)
+
+    def _replace_via_tmp(self, df: DataFrame, replace_hours: bool) -> None:
+        """Land `df` in a sibling directory first, then overwrite the
+        table from it: `df` may read the table it replaces."""
+        tmp = self.path + ".tmp"
+        write_hours(df, tmp, "overwrite", self.ts_col)
+        write_hours(
+            self.spark.read.parquet(tmp), self.path, "overwrite",
+            replace_hours=replace_hours,
         )
+        hadoop_fs.delete(self.spark, tmp)
 
     def overwrite(self, df: DataFrame) -> None:
         """Dynamic partition overwrite on BOTH backends: only the
@@ -86,17 +123,7 @@ class LakeTable:
         if self.iceberg:
             df.writeTo(self.name).overwritePartitions()
             return
-        out = self._with_partition(df)
-        out.write.mode("overwrite").partitionBy("ts_hour").parquet(
-            self.path + ".tmp"
-        )
-        (
-            self.spark.read.parquet(self.path + ".tmp")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ts_hour")
-            .parquet(self.path)
-        )
+        self._replace_via_tmp(df, replace_hours=True)
 
     def merge_by_key(self, df: DataFrame, key_cols: list[str]) -> None:
         """Upsert: MERGE INTO on Iceberg; latest-wins rewrite on the
@@ -113,8 +140,8 @@ class LakeTable:
             return
         from pyspark.sql import Window as W
 
-        new = self._with_partition(df).withColumn("__gen", F.lit(1))
-        if os.path.exists(self.path):
+        new = with_ts_hour(df, self.ts_col).withColumn("__gen", F.lit(1))
+        if hadoop_fs.exists(self.spark, self.path):
             old = self.spark.read.parquet(self.path).withColumn(
                 "__gen", F.lit(0)
             )
@@ -127,15 +154,7 @@ class LakeTable:
             .filter(F.col("__rn") == 1)
             .drop("__rn", "__gen")
         )
-        latest.persist()
-        latest.count()
-        latest.write.mode("overwrite").partitionBy("ts_hour").parquet(
-            self.path + ".tmp"
-        )
-        self.spark.read.parquet(self.path + ".tmp").write.mode(
-            "overwrite"
-        ).partitionBy("ts_hour").parquet(self.path)
-        latest.unpersist()
+        self._replace_via_tmp(latest, replace_hours=False)
 
     # -- reads --------------------------------------------------------
     def read(self, schema=None) -> DataFrame:

@@ -42,13 +42,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from matano_spark.lake import ts_hour_utc
-
-
-def _fs(spark, path_str: str):
-    jvm = spark._jvm
-    path = jvm.org.apache.hadoop.fs.Path(path_str)
-    return path.getFileSystem(spark._jsc.hadoopConfiguration()), path
+from matano_spark import hadoop_fs
+from matano_spark.lake import write_hours
 
 
 class SnapshotLakeTable:
@@ -66,46 +61,31 @@ class SnapshotLakeTable:
 
     def snapshots(self) -> list[dict]:
         """All retained manifests, oldest first."""
-        fs, p = _fs(self.spark, self._manifest_dir())
+        fs, p = hadoop_fs.fs_path(self.spark, self._manifest_dir())
         if not fs.exists(p):
             return []
         out = []
         for st in fs.listStatus(p):
-            nm = st.getPath().getName()
-            if not nm.endswith(".json"):
+            if not st.getPath().getName().endswith(".json"):
                 continue
-            stream = fs.open(st.getPath())
-            try:
-                # py4j can't fill a Python buffer in place; commons-io
-                # (shipped with Hadoop) drains the stream JVM-side.
-                text = self.spark._jvm.org.apache.commons.io.IOUtils.toString(
-                    stream, "UTF-8"
-                )
-            finally:
-                stream.close()
-            out.append(json.loads(text))
+            text = hadoop_fs.read_text(self.spark, st.getPath().toString())
+            if text is not None:  # expired between listing and read
+                out.append(json.loads(text))
         return sorted(out, key=lambda m: m["id"])
 
     def _try_commit(self, manifest: dict) -> bool:
         """CAS publish: create-if-absent of `_snapshots/<id>.json`.
         Returns False when another writer already took this id."""
-        fs, _ = _fs(self.spark, self.path)
-        jvm = self.spark._jvm
-        p = jvm.org.apache.hadoop.fs.Path(
-            f"{self._manifest_dir()}/{manifest['id']}.json"
-        )
-        if fs.exists(p):
+        p = f"{self._manifest_dir()}/{manifest['id']}.json"
+        if hadoop_fs.exists(self.spark, p):
             return False
         try:
-            stream = fs.create(p, False)  # atomic create-no-overwrite
+            # atomic create-no-overwrite
+            hadoop_fs.write_text(self.spark, p, json.dumps(manifest), overwrite=False)
         except Exception:
-            if fs.exists(p):  # lost the race inside the window
+            if hadoop_fs.exists(self.spark, p):  # lost the race inside the window
                 return False
             raise
-        try:
-            stream.write(bytearray(json.dumps(manifest).encode()))
-        finally:
-            stream.close()
         return True
 
     MAX_COMMIT_RETRIES = 20
@@ -134,13 +114,11 @@ class SnapshotLakeTable:
 
     # -- writes --------------------------------------------------------
     def _land(self, df: DataFrame, d: str) -> str:
-        out = df
-        if self.ts_col in df.columns and "ts_hour" not in df.columns:
-            out = df.withColumn("ts_hour", ts_hour_utc(self.ts_col))
-        writer = out.write.mode("overwrite")
-        if "ts_hour" in out.columns:
-            writer = writer.partitionBy("ts_hour")
-        writer.parquet(f"{self.path}/{d}")
+        target = f"{self.path}/{d}"
+        if self.ts_col in df.columns or "ts_hour" in df.columns:
+            write_hours(df, target, "overwrite", self.ts_col)
+        else:  # a table without event time is not hour-partitioned
+            df.write.mode("overwrite").parquet(target)
         return d
 
     @staticmethod
@@ -322,17 +300,12 @@ class SnapshotLakeTable:
         keep = snaps[-keep_last:] if keep_last > 0 else []
         drop = snaps[: len(snaps) - len(keep)]
         live_dirs = {d for m in keep for d in m["dirs"]}
-        fs, _ = _fs(self.spark, self.path)
-        jvm = self.spark._jvm
         for m in drop:
-            fs.delete(
-                jvm.org.apache.hadoop.fs.Path(
-                    f"{self._manifest_dir()}/{m['id']}.json"
-                ),
-                False,
+            hadoop_fs.delete(
+                self.spark, f"{self._manifest_dir()}/{m['id']}.json", False
             )
         removed_dirs = []
-        root = jvm.org.apache.hadoop.fs.Path(self.path)
+        fs, root = hadoop_fs.fs_path(self.spark, self.path)
         for st in fs.listStatus(root):
             nm = st.getPath().getName()
             if (

@@ -18,17 +18,36 @@ Write modes (ref Enrichment.kt:336-366; MERGE SQL :305-324):
 
 from __future__ import annotations
 
+import json
 import os
 from functools import lru_cache
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from matano_spark import hadoop_fs
 
 
 class EnrichmentStore:
     """Directory-backed enrichment tables (parquet fallback; with an
-    Iceberg catalog the same API maps to saveAsTable/MERGE INTO)."""
+    Iceberg catalog the same API maps to saveAsTable/MERGE INTO).
+
+    Schema record: every write leaves `<table>/_schema.json`, the
+    table's Spark schema as JSON, written through the Hadoop FS API
+    after the data commit (Parquet readers skip files that start with
+    `_`). An overwrite records the frame's schema, a merge the merged
+    frame's schema, an append the union of the old record and the new
+    frame's columns. `read()` passes the record to
+    `spark.read.schema(...)`, so reading a table plans without the
+    schema-inference job a bare `spark.read.parquet` runs. That job
+    would otherwise be the first job of every query that joins the
+    table, and a stream that re-reads the table per micro-batch would
+    pay it every batch. A column added by a later append shows in every
+    read, whichever file a footer sample would have picked."""
+
+    SCHEMA_RECORD = "_schema.json"
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
@@ -37,8 +56,29 @@ class EnrichmentStore:
     def _path(self, name: str) -> str:
         return os.path.join(self.root, name)
 
+    def _recorded(self, name: str) -> T.StructType | None:
+        text = hadoop_fs.read_text(
+            self.spark, f"{self._path(name)}/{self.SCHEMA_RECORD}"
+        )
+        return None if text is None else T.StructType.fromJson(json.loads(text))
+
     def read(self, name: str) -> DataFrame:
-        return self.spark.read.parquet(self._path(name))
+        schema = self._recorded(name)
+        if schema is None:
+            raise FileNotFoundError(
+                f"enrichment table {name!r} has no schema record under "
+                f"{self._path(name)}; write it through EnrichmentStore.write"
+            )
+        return self.spark.read.schema(schema).parquet(self._path(name))
+
+    def _replace(self, path: str, df: DataFrame) -> None:
+        """Land `df` in a sibling directory, then overwrite the table from
+        it: `df` may read the table it replaces."""
+        df.write.mode("overwrite").parquet(path + ".tmp")
+        self.spark.read.schema(df.schema).parquet(path + ".tmp").write.mode(
+            "overwrite"
+        ).parquet(path)
+        hadoop_fs.delete(self.spark, path + ".tmp")
 
     def write(
         self,
@@ -48,14 +88,17 @@ class EnrichmentStore:
         primary_key: str | None = None,
     ) -> None:
         path = self._path(name)
-        if mode == "overwrite" or not os.path.exists(path):
-            df.write.mode("overwrite").parquet(path + ".tmp")
-            self.spark.read.parquet(path + ".tmp").write.mode("overwrite").parquet(path)
-            return
-        if mode == "append":
+        if mode == "overwrite" or not hadoop_fs.exists(self.spark, path):
+            self._replace(path, df)
+            schema = df.schema
+        elif mode == "append":
             df.write.mode("append").parquet(path)
-            return
-        if mode == "merge":
+            old = self._recorded(name) or T.StructType()
+            known = set(old.fieldNames())
+            schema = T.StructType(
+                old.fields + [f for f in df.schema.fields if f.name not in known]
+            )
+        elif mode == "merge":
             if not primary_key:
                 raise ValueError("merge mode requires primary_key")
             # MERGE INTO ... WHEN MATCHED UPDATE ALL / NOT MATCHED INSERT
@@ -70,13 +113,11 @@ class EnrichmentStore:
                 .filter(F.col("__rn") == 1)
                 .drop("__rn", "__gen")
             )
-            merged.persist()
-            merged.count()
-            merged.write.mode("overwrite").parquet(path + ".tmp")
-            self.spark.read.parquet(path + ".tmp").write.mode("overwrite").parquet(path)
-            merged.unpersist()
-            return
-        raise ValueError(f"unknown write mode {mode!r}")
+            self._replace(path, merged)
+            schema = merged.schema
+        else:
+            raise ValueError(f"unknown write mode {mode!r}")
+        hadoop_fs.write_text(self.spark, f"{path}/{self.SCHEMA_RECORD}", schema.json())
 
 
 def enrich(

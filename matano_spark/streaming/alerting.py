@@ -158,7 +158,7 @@ def run_streaming_alerts_to_dir(
         from pyspark.sql import Window as W
         from pyspark.sql import functions as F
 
-        from matano_spark.lake import ts_hour_utc
+        from matano_spark.lake import ts_hour_utc, write_hours
 
         new = batch.withColumn("ts_hour", ts_hour_utc("first_matched_at"))
         touched = [r.ts_hour for r in new.select("ts_hour").distinct().collect()]
@@ -187,12 +187,7 @@ def run_streaming_alerts_to_dir(
         # localCheckpoint breaks the read-from/write-to-same-path cycle;
         # dynamic overwrite replaces only the touched hour partitions
         latest = latest.localCheckpoint(eager=True)
-        (
-            latest.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ts_hour")
-            .parquet(out_dir)
-        )
+        write_hours(latest, out_dir, "overwrite", replace_hours=True)
 
     return (
         alerts.writeStream.foreachBatch(merge_batch)

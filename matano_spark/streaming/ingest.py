@@ -21,12 +21,13 @@ parquet path is the tested one.
 
 from __future__ import annotations
 
-import os
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from matano_spark.lake import write_hours
 
 CORRUPT_COL = "_corrupt_record"
 
@@ -73,7 +74,7 @@ def run_ingest(
     Each micro-batch:
       1. split corrupt rows → quarantine (grouped by error kind)
       2. transform good rows with the compiled pipeline
-      3. append to the lake partitioned by ts_hour (W1 hidden
+      3. append to the lake partitioned by the UTC ts_hour (W1 hidden
          partition analog, ref IcebergMetadataWriter.kt:60-65)
     """
     stream = read_json_stream(spark, source_dir, schema)
@@ -93,16 +94,7 @@ def run_ingest(
                         F.lit(epoch_id).alias("epoch_id"),
                     ).write.mode("append").parquet(quarantine_dir)
                 )
-            out = pipeline(good)
-            out = out.withColumn(
-                "ts_hour",
-                F.date_format(F.col(ts_col), "yyyy-MM-dd-HH"),
-            )
-            (
-                out.write.mode("append")
-                .partitionBy("ts_hour")
-                .parquet(out_dir)
-            )
+            write_hours(pipeline(good), out_dir, ts_col=ts_col)
         finally:
             batch.unpersist()
 

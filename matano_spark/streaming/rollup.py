@@ -21,45 +21,21 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from matano_spark import hadoop_fs
 from matano_spark.operators.rollup import SCALE
-
-
-def _hadoop_fs(spark, path_str: str):
-    jvm = spark._jvm
-    path = jvm.org.apache.hadoop.fs.Path(path_str)
-    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
-    return fs, path
 
 
 def _read_marker(spark, marker: str) -> int:
     """Last committed epoch, via the Hadoop FS API (works on any
     scheme the cluster can reach, not just the driver's local disk)."""
-    fs, path = _hadoop_fs(spark, marker)
-    if not fs.exists(path):
-        return -1
-    stream = fs.open(path)
     try:
-        vals = []
-        for _ in range(32):  # epoch ids are short ascii integers
-            b = stream.read()
-            if b == -1:
-                break
-            vals.append(b)
-    finally:
-        stream.close()
-    try:
-        return int(bytes(vals).decode("ascii").strip())
+        return int((hadoop_fs.read_text(spark, marker) or "").strip())
     except ValueError:
         return -1
 
 
 def _write_marker(spark, marker: str, epoch_id: int) -> None:
-    fs, path = _hadoop_fs(spark, marker)
-    out = fs.create(path, True)
-    try:
-        out.write(bytearray(str(epoch_id).encode("ascii")))
-    finally:
-        out.close()
+    hadoop_fs.write_text(spark, marker, str(epoch_id))
 
 
 def _delta(batch: DataFrame, ts_col: str, key_cols: list[str], value_col: str):

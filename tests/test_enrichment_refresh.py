@@ -58,10 +58,12 @@ def test_enrichment_rebroadcast_per_batch(spark, tmpdir):
         .load(str(src))
     )
     out_rows = []
+    seen = {}
 
     def process(batch, epoch_id):
         # re-read per batch → new snapshot, new broadcast (W5)
         intel = store.read("intel")
+        seen[epoch_id] = sorted(tuple(r) for r in intel.collect())
         enriched = enrich(batch, intel, on={"ip": "ip"}, target="intel")
         for r in enriched.collect():
             d = r.asDict(recursive=True)
@@ -88,3 +90,5 @@ def test_enrichment_rebroadcast_per_batch(spark, tmpdir):
     assert got["b1.json-0"] == "benign"
     assert got["b1.json-1"] is None  # unknown at batch-1 time
     assert got["b2.json-0"] == "malicious"  # refreshed snapshot visible
+    # the re-read sees the MERGED table: old rows kept, new row added
+    assert seen[1] == [("1.1.1.1", "benign"), ("6.6.6.6", "malicious")]

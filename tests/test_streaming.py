@@ -92,6 +92,36 @@ def test_ingest_transform_partition_quarantine(spark, tmpdir):
     assert ingest_counts(spark, out_dir, quar_dir) == (3, 1)
 
 
+def test_ingest_hours_are_utc_in_non_utc_session(spark, tmpdir):
+    """The hour key is the event's UTC hour whatever the session zone:
+    the same events land in the same partitions as under UTC."""
+    src = tmpdir / "src"
+    src.mkdir()
+    with open(src / "a.json", "w") as f:
+        for t in ("2024-05-01T10:15:00Z", "2024-05-01T10:45:00Z", "2024-05-01T11:05:00Z"):
+            f.write(json.dumps({"event_time": t, "action": "GetObject", "src_ip": "10.0.0.1"}) + "\n")
+    pipeline = compile_pipeline(
+        [
+            Assign("ts", Fn("to_timestamp", P("event_time"))),
+            Assign("event.action", P("action")),
+        ]
+    )
+    out_dir = str(tmpdir / "lake")
+    key = "spark.sql.session.timeZone"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "America/New_York")
+    try:
+        q = run_ingest(
+            spark, str(src), EVENT_SCHEMA, pipeline, out_dir,
+            str(tmpdir / "ckpt"), str(tmpdir / "quarantine"),
+        )
+        q.awaitTermination(120)
+    finally:
+        spark.conf.set(key, before)
+    parts = {r.ts_hour for r in spark.read.parquet(out_dir).select("ts_hour").collect()}
+    assert parts == {"2024-05-01-10", "2024-05-01-11"}
+
+
 def test_streaming_alerts_state_across_batches(spark, tmpdir):
     """Matches arrive in two micro-batches; the alert anchored in batch
     one must accumulate counts (not reset) in batch two."""
