@@ -64,17 +64,35 @@ def _oracle_scratch(prefix: str) -> str:
 def _verbatim_table_def(pack: str, table: str):
     """Compile one pack table from the REFERENCE yml text itself —
     the migration guarantee (a matano user's transform runs unedited).
-    Falls back to the repo's ported pack if the reference tree is
-    absent."""
+    Returns (table def, from_reference). When the reference tree is
+    absent it falls back to the repo's ported pack, which reads its
+    declared input_fields, not the reference's variant record: see
+    _through_verbatim."""
     from matano_spark.schema.config import load_log_source
 
-    root = _REF_PACK_ROOT if os.path.isdir(_REF_PACK_ROOT) else _PACK_ROOT
+    from_reference = os.path.isdir(_REF_PACK_ROOT)
+    root = _REF_PACK_ROOT if from_reference else _PACK_ROOT
     # strict=False: reference transforms write some paths their own
     # schema omits (relying on the schema cast to drop them)
     for td in load_log_source(os.path.join(root, pack), strict=False):
         if td.name == table:
-            return td
+            return td, from_reference
     raise KeyError(f"{pack}/{table}")
+
+
+def _through_verbatim(
+    td, from_reference: bool, raw: DataFrame, needed: tuple[str, ...]
+) -> DataFrame:
+    """Run a `json` string frame through a _verbatim_table_def program.
+
+    The reference programs read the record as a parse_json variant
+    (`.json`); the ported fallback reads its declared input_fields
+    through the ingest parse step, so `raw` must already be in the
+    shape of whichever program was loaded."""
+    if from_reference:
+        raw = raw.select(F.parse_json("json").alias("json"))
+        return td.pipeline_for(needed)(raw)
+    return _through_pipeline(td, raw, needed=needed)
 
 
 @lru_cache(maxsize=32)
@@ -250,35 +268,46 @@ def sigma_sliced_okta_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def msft_signin_verbatim_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sign-in outcome rollup through the REFERENCE msft/aad_signinlogs
-    transform text loaded verbatim from the reference yml (fallback:
-    the repo's ported copy) — PascalCase→snake_case recursive map_keys
-    regex loop, status.error_code outcome chain, parse_groks
-    user-principal split (ref msft/tables/aad_signinlogs.yml:183-300).
-    The migration guarantee as an oracle-gated query, not just a
-    pytest golden."""
-    td = _verbatim_table_def("msft", "aad_signinlogs")
+    transform text loaded verbatim from the reference yml — PascalCase→
+    snake_case recursive map_keys regex loop, status.error_code outcome
+    chain, parse_groks user-principal split (ref msft/tables/
+    aad_signinlogs.yml:183-300). The migration guarantee as an
+    oracle-gated query, not just a pytest golden.
+
+    Without the reference tree the repo's ported copy runs instead, fed
+    the port's declared input (camelCase keys, `_table`, a long
+    status.errorCode) through its ingest parse step; the PascalCase
+    variant record is then not exercised."""
+    td, from_reference = _verbatim_table_def("msft", "aad_signinlogs")
     ev = t(spark, sf_dir, "events")
-    raw = ev.select(
-        F.parse_json(
-            F.to_json(
-                F.struct(
-                    F.col("ts").cast("string").alias("CreatedDateTime"),
-                    F.col("event_id").cast("string").alias("Id"),
-                    F.concat(
-                        F.lit("user-"),
-                        F.col("user_id").cast("string"),
-                        F.lit("@example.com"),
-                    ).alias("UserPrincipalName"),
-                    F.struct(
-                        F.when(F.col("event_type") == "error", F.lit(50126))
-                        .otherwise(F.lit(0))
-                        .alias("ErrorCode")
-                    ).alias("Status"),
-                )
-            )
-        ).alias("json")
+    upn = F.concat(
+        F.lit("user-"), F.col("user_id").cast("string"), F.lit("@example.com")
     )
-    ecs = td.pipeline_for(("event.outcome", "user.name", "ts"))(raw)
+    error_code = (
+        F.when(F.col("event_type") == "error", F.lit(50126))
+        .otherwise(F.lit(0))
+    )
+    if from_reference:
+        record = F.struct(
+            F.col("ts").cast("string").alias("CreatedDateTime"),
+            F.col("event_id").cast("string").alias("Id"),
+            upn.alias("UserPrincipalName"),
+            F.struct(error_code.alias("ErrorCode")).alias("Status"),
+        )
+    else:
+        record = F.struct(
+            F.lit("aad_signinlogs").alias("_table"),
+            F.col("ts").cast("string").alias("createdDateTime"),
+            F.col("event_id").cast("string").alias("id"),
+            upn.alias("userPrincipalName"),
+            F.struct(error_code.cast("long").alias("errorCode")).alias("status"),
+        )
+    ecs = _through_verbatim(
+        td,
+        from_reference,
+        ev.select(F.to_json(record).alias("json")),
+        ("event.outcome", "user.name", "ts"),
+    )
     return ecs.groupBy(
         F.col("event.outcome").alias("outcome"),
         F.date_trunc("day", F.col("ts")).alias("day"),
@@ -309,32 +338,37 @@ def cloudtrail_verbatim_action_rollup(
     (log_source.yml:10-95: eventTime ts, userIdentity spread,
     sourceIPAddress grok) concatenated with the full tables/default.yml
     program (errorCode→outcome chain at :572, per-action related-user
-    mappings), exactly as the reference deploys it."""
-    td = _verbatim_table_def("aws_cloudtrail", "default")
+    mappings), exactly as the reference deploys it.
+
+    Without the reference tree the repo's ported copy runs instead: the
+    same record, whose keys already match the port's input_fields, goes
+    through its ingest parse step, so the `.json` variant handling is
+    then not exercised."""
+    td, from_reference = _verbatim_table_def("aws_cloudtrail", "default")
     ev = t(spark, sf_dir, "events")
-    raw = ev.select(
-        F.parse_json(
-            F.to_json(
-                F.struct(
-                    F.col("ts").cast("string").alias("eventTime"),
-                    F.col("event_type").alias("eventName"),
-                    F.col("event_id").cast("string").alias("eventID"),
-                    F.lit("signin.amazonaws.com").alias("eventSource"),
-                    F.concat(
-                        F.lit("10.0.0."),
-                        (F.col("user_id") % 250).cast("string"),
-                    ).alias("sourceIPAddress"),
-                    F.when(
-                        F.col("event_type") == "error", F.lit("AccessDenied")
-                    ).alias("errorCode"),
-                )
-            )
-        ).alias("json")
+    record = F.struct(
+        F.col("ts").cast("string").alias("eventTime"),
+        F.col("event_type").alias("eventName"),
+        F.col("event_id").cast("string").alias("eventID"),
+        F.lit("signin.amazonaws.com").alias("eventSource"),
+        F.concat(
+            F.lit("10.0.0."),
+            (F.col("user_id") % 250).cast("string"),
+        ).alias("sourceIPAddress"),
+        F.when(
+            F.col("event_type") == "error", F.lit("AccessDenied")
+        ).alias("errorCode"),
     )
-    ecs = td.pipeline_for(("event.action", "event.outcome", "ts"))(raw)
+    ecs = _through_verbatim(
+        td,
+        from_reference,
+        ev.select(F.to_json(record).alias("json")),
+        ("event.action", "event.outcome", "ts"),
+    )
     return ecs.groupBy(
-        # event.action is a variant passthrough of .json.eventName —
-        # concretize for grouping
+        # on the reference path event.action is a variant passthrough of
+        # .json.eventName (the port already lands a string) — concretize
+        # for grouping
         F.col("event.action").cast("string").alias("action"),
         F.col("event.outcome").cast("string").alias("outcome"),
         F.date_trunc("day", F.col("ts")).alias("day"),

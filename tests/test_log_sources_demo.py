@@ -139,33 +139,38 @@ def test_s3inventory_pack(spark, tmpdir):
     assert short["file"]["size"] == 7
 
 
-def test_cloudtrail_pack(spark, tmpdir):
+# FIXTURES.md B1 record (fields the ported pack declares)
+CLOUDTRAIL_B1 = {
+    "eventVersion": "1.08",
+    "eventTime": "2024-05-01T12:34:56Z",
+    "eventSource": "s3.amazonaws.com",
+    "eventName": "GetObject",
+    "awsRegion": "us-east-1",
+    "sourceIPAddress": "10.1.2.3",
+    "userAgent": "aws-cli/2.0",
+    "requestID": "r-1",
+    "eventID": "e-1",
+    "eventType": "AwsApiCall",
+    "readOnly": True,
+    "userIdentity": {
+        "type": "IAMUser",
+        "principalId": "AIDAEXAMPLE",
+        "userName": "alice",
+        "accountId": "123456789012",
+        "arn": "arn:aws:iam::123456789012:user/alice",
+    },
+}
+
+
+def _cloudtrail_default(spark, tmpdir, record):
+    """One record through the aws_cloudtrail pack's ingest path (gzip
+    object → route → Records expansion) and its default-table transform."""
     import gzip
 
     defs = {d.name: d for d in load_log_source(str(ROOT / "aws_cloudtrail"))}
     td = defs["default"]
     input_schema = fields_to_structtype(td.ingest["input_fields"])
 
-    record = {
-        "eventVersion": "1.08",
-        "eventTime": "2024-05-01T12:34:56Z",
-        "eventSource": "s3.amazonaws.com",
-        "eventName": "GetObject",
-        "awsRegion": "us-east-1",
-        "sourceIPAddress": "10.1.2.3",
-        "userAgent": "aws-cli/2.0",
-        "requestID": "r-1",
-        "eventID": "e-1",
-        "eventType": "AwsApiCall",
-        "readOnly": True,
-        "userIdentity": {
-            "type": "IAMUser",
-            "principalId": "AIDAEXAMPLE",
-            "userName": "alice",
-            "accountId": "123456789012",
-            "arn": "arn:aws:iam::123456789012:user/alice",
-        },
-    }
     with gzip.open(tmpdir / "trail.json.gz", "wt") as f:
         f.write(json.dumps({"Records": [record]}))
 
@@ -179,12 +184,16 @@ def test_cloudtrail_pack(spark, tmpdir):
         td.ingest["expand_records_field"],
         input_schema,
     )
-    r = td.pipeline(records).collect()[0].asDict(recursive=True)
+    return td.pipeline(records).collect()[0].asDict(recursive=True)
+
+
+def test_cloudtrail_pack(spark, tmpdir):
+    r = _cloudtrail_default(spark, tmpdir, CLOUDTRAIL_B1)
 
     assert r["ts"] == dt.datetime(2024, 5, 1, 12, 34, 56)
     assert r["event"] == {
         "provider": "s3.amazonaws.com", "action": "GetObject",
-        "id": "e-1", "kind": "event",
+        "id": "e-1", "kind": "event", "outcome": "success",
     }
     assert r["cloud"] == {
         "region": "us-east-1", "provider": "aws",
@@ -195,3 +204,13 @@ def test_cloudtrail_pack(spark, tmpdir):
     assert r["related"] == {"ip": ["10.1.2.3"], "user": ["alice"]}
     assert r["aws"]["cloudtrail"]["user_identity"]["type"] == "IAMUser"
     assert r["aws"]["cloudtrail"]["read_only"] is True
+
+
+def test_cloudtrail_error_code_sets_failure_outcome(spark, tmpdir):
+    """errorCode → event.outcome: a record carrying an errorCode is a
+    failed call, and the code itself lands in aws.cloudtrail.error_code."""
+    r = _cloudtrail_default(
+        spark, tmpdir, {**CLOUDTRAIL_B1, "errorCode": "AccessDenied"}
+    )
+    assert r["event"]["outcome"] == "failure"
+    assert r["aws"]["cloudtrail"]["error_code"] == "AccessDenied"
