@@ -12,12 +12,13 @@ Semantics (fixed-anchor deduplication window, NOT gap sessions):
   `created_at` is stamped at the activating match (:199-237).
 
 The anchor depends on the running state, so this is a per-key
-sequential fold — exactly the shape of applyInPandas: partition by
-(rule_name, dedupe), sort within group, loop in vectorized batches.
-At 100 TB the key space (rules × dedupe values) is huge and uniform,
-so groups are small and the shuffle is well balanced; the same loop
-body runs under applyInPandasWithState in streaming
-(matano_spark.streaming.alerting).
+sequential fold. `fold_alerts` is that recurrence, written once in
+plain Python over one key's matches in time order, and both engines
+run it: `aggregate_alerts` (batch: repartition by key, sort, one
+mapInPandas pass) and matano_spark.streaming.alerting
+(applyInPandasWithState, starting from the key's GroupState). The open
+alert is a STATE_SCHEMA tuple; `alert_row` turns one into an
+ALERT_SCHEMA row.
 
 Alert ids are deterministic: md5(rule:dedupe:epoch_us(first_matched_at))
 — replayable, idempotent on reprocessing, and oracle-checkable (the
@@ -27,9 +28,10 @@ reference mints uuids; determinism is strictly stronger).
 from __future__ import annotations
 
 import hashlib
+from itertools import groupby
 
+import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 ALERT_SCHEMA = T.StructType(
@@ -45,17 +47,100 @@ ALERT_SCHEMA = T.StructType(
     ]
 )
 
+# typed columns — an untyped empty frame infers float64 and fails the
+# Arrow cast to timestamp
+ALERT_DTYPES = {
+    "rule_name": "object",
+    "dedupe": "object",
+    "alert_id": "object",
+    "first_matched_at": "datetime64[ns]",
+    "last_matched_at": "datetime64[ns]",
+    "match_count": "int64",
+    "activated": "bool",
+    "created_at": "datetime64[ns]",
+}
+
+# the open alert of one (rule_name, dedupe) key
+STATE_SCHEMA = T.StructType(
+    [
+        T.StructField("anchor_us", T.LongType()),
+        T.StructField("count", T.LongType()),
+        T.StructField("activated", T.BooleanType()),
+        T.StructField("created_us", T.LongType()),
+        T.StructField("last_us", T.LongType()),
+    ]
+)
+
 
 def alert_id_for(rule_name: str, dedupe: str, first_us: int) -> str:
     return hashlib.md5(f"{rule_name}:{dedupe}:{first_us}".encode()).hexdigest()
+
+
+def rule_settings(
+    rule_config: dict[str, tuple[int, int]] | None,
+    threshold: int,
+    window_seconds: int,
+):
+    """rule_name → (threshold, window_seconds): the rule's entry in
+    `rule_config` (the detection.yml alert block), else the global
+    defaults."""
+    cfg = dict(rule_config or {})
+    return lambda rule: cfg.get(rule, (threshold, window_seconds))
+
+
+def epoch_us(ts: pd.Series) -> list[int]:
+    return ts.to_numpy("datetime64[us]").astype("int64").tolist()
+
+
+def fold_alerts(
+    state: tuple | None, ts_us: list[int], threshold: int, window_us: int
+) -> tuple[list[tuple], tuple | None]:
+    """Fold one key's matches (epoch µs, in time order) into its open
+    alert `state` (a STATE_SCHEMA tuple, None when there is none).
+    Returns (closed, state): the alerts these matches closed, and the
+    open alert after the last one."""
+    closed = []
+    anchor, count, activated, created, last = state or (None, 0, False, None, None)
+    for t in ts_us:
+        if anchor is None or t - anchor >= window_us:
+            if anchor is not None:
+                closed.append((anchor, count, activated, created, last))
+            anchor, count, activated, created = t, 0, False, None
+        count += 1
+        last = t
+        if not activated and count >= threshold:
+            activated, created = True, t
+    if anchor is None:
+        return closed, None
+    return closed, (anchor, count, activated, created, last)
+
+
+def alert_row(rule_name: str, dedupe: str, state: tuple) -> dict:
+    anchor_us, count, activated, created_us, last_us = state
+    # nanosecond Timestamps: the frame's datetime64[ns] columns take
+    # them without a per-value conversion
+    return {
+        "rule_name": rule_name,
+        "dedupe": dedupe,
+        "alert_id": alert_id_for(rule_name, dedupe, anchor_us),
+        "first_matched_at": pd.Timestamp(anchor_us * 1000),
+        "last_matched_at": pd.Timestamp(last_us * 1000),
+        "match_count": count,
+        "activated": activated,
+        "created_at": (
+            None if created_us is None else pd.Timestamp(created_us * 1000)
+        ),
+    }
+
+
+def alert_frame(rows: list[dict]) -> pd.DataFrame:
+    return pd.DataFrame(rows, columns=list(ALERT_DTYPES)).astype(ALERT_DTYPES)
 
 
 def aggregate_alerts(
     matches: DataFrame,
     threshold: int = 1,
     window_seconds: int = 3600,
-    ts_col: str = "ts",
-    id_col: str = "match_id",
     rule_config: dict[str, tuple[int, int]] | None = None,
 ) -> DataFrame:
     """Fold rule matches into alerts (batch form of the state machine).
@@ -69,190 +154,45 @@ def aggregate_alerts(
     fold rules with different thresholds/windows together. The map is
     rule-count-sized and ships in the task closure (no join needed).
 
-    Execution: with a GLOBAL (threshold, window) config the fold runs
-    entirely in the JVM (aggregate_alerts_sql — collect_list +
-    `aggregate` lambda per key): the r10 A/B at 10× match volume
-    measured it 1.44 → 0.89 s min vs the mapInPandas pass (tie at 1×),
-    with exact parity at both volumes, so the JVM fold is now the
-    batch default. The mapInPandas partition fold below remains for
-    per-rule configs (closure-shipped thresholds) and is the shape the
-    streaming path shares; it also never materializes a key's matches
-    as one array, so it stays the fallback if a pathological dedupe
-    key (10⁷ matches on one reducer) ever matters more than the
-    steady-state win. mapInPandas itself beats per-group applyInPandas
-    by an order of magnitude when keys are many and groups are small.
+    Execution: repartition by key and sort each partition by (key, ts,
+    match_id), so every key is one contiguous run; mapInPandas folds
+    the runs in order, carrying a key's open alert across Arrow
+    batches. No key's matches are ever held as one array, so a hot
+    dedupe key costs linear time on its reducer. mapInPandas beats
+    per-group applyInPandas by an order of magnitude when keys are many
+    and groups are small.
     """
-    if rule_config is None:
-        return aggregate_alerts_sql(
-            matches, threshold, window_seconds, ts_col, id_col
-        )
-    cfg = {
-        r: (thr, win * 1_000_000)
-        for r, (thr, win) in (rule_config or {}).items()
-    }
-    default_cfg = (threshold, window_seconds * 1_000_000)
+    settings = rule_settings(rule_config, threshold, window_seconds)
 
-    def fold_partition(batches):
-        import pandas as pd
-
-        out_cols = [f.name for f in ALERT_SCHEMA.fields]
-        state: dict | None = None  # open alert of the current key
-        cur_key: tuple | None = None
-        thr, window_us = default_cfg
-        pending: list[dict] = []
-
-        def close():
-            nonlocal state
-            if state is not None:
-                pending.append(state)
-                state = None
-
-        for pdf in batches:
-            ts_us = pdf[ts_col].astype("int64") // 1000
-            for rule, key, t_us in zip(
-                pdf["rule_name"], pdf["dedupe"], ts_us
-            ):
-                k = (rule, key)
-                if k != cur_key:
-                    close()
-                    cur_key = k
-                    thr, window_us = cfg.get(rule, default_cfg)
-                t_us = int(t_us)
-                if state is None or t_us - state["_anchor_us"] >= window_us:
-                    close()
-                    state = {
-                        "rule_name": rule,
-                        "dedupe": key,
-                        "alert_id": alert_id_for(rule, key, t_us),
-                        "first_matched_at": pd.Timestamp(t_us * 1000),
-                        "last_matched_at": pd.Timestamp(t_us * 1000),
-                        "match_count": 1,
-                        "activated": 1 >= thr,
-                        "created_at": (
-                            pd.Timestamp(t_us * 1000) if 1 >= thr else None
-                        ),
-                        "_anchor_us": t_us,
-                    }
-                else:
-                    state["match_count"] += 1
-                    state["last_matched_at"] = pd.Timestamp(t_us * 1000)
-                    if (
-                        not state["activated"]
-                        and state["match_count"] >= thr
-                    ):
-                        state["activated"] = True
-                        state["created_at"] = pd.Timestamp(t_us * 1000)
-            if len(pending) >= 10_000:
-                yield pd.DataFrame(pending, columns=out_cols)
-                pending.clear()
-        close()
-        if pending:
-            yield pd.DataFrame(pending, columns=out_cols)
-        else:
-            # typed empty frame — untyped empties infer float64 and fail
-            # the Arrow cast to timestamp
-            dtypes = {
-                "rule_name": "object",
-                "dedupe": "object",
-                "alert_id": "object",
-                "first_matched_at": "datetime64[ns]",
-                "last_matched_at": "datetime64[ns]",
-                "match_count": "int64",
-                "activated": "bool",
-                "created_at": "datetime64[ns]",
-            }
-            yield pd.DataFrame(
-                {c: pd.Series(dtype=dtypes[c]) for c in out_cols}
-            )
+    def fold_sorted(pdfs):
+        key, state, rows = None, None, []
+        for pdf in pdfs:
+            ts_us = epoch_us(pdf["ts"])
+            start = 0
+            for k, run in groupby(zip(pdf["rule_name"], pdf["dedupe"])):
+                end = start + len(list(run))
+                if k != key:
+                    if state is not None:
+                        rows.append(alert_row(*key, state))
+                    key, state = k, None
+                thr, win_s = settings(k[0])
+                closed, state = fold_alerts(
+                    state, ts_us[start:end], thr, win_s * 1_000_000
+                )
+                rows += [alert_row(*k, s) for s in closed]
+                start = end
+            if len(rows) >= 10_000:
+                yield alert_frame(rows)
+                rows = []
+        if state is not None:
+            rows.append(alert_row(*key, state))
+        yield alert_frame(rows)
 
     return (
-        matches.select("rule_name", "dedupe", ts_col, id_col)
+        matches.select("rule_name", "dedupe", "ts", "match_id")
         .repartition("rule_name", "dedupe")
-        .sortWithinPartitions("rule_name", "dedupe", ts_col, id_col)
-        .mapInPandas(fold_partition, ALERT_SCHEMA)
-    )
-
-
-def aggregate_alerts_sql(
-    matches: DataFrame,
-    threshold: int = 1,
-    window_seconds: int = 3600,
-    ts_col: str = "ts",
-    id_col: str = "match_id",
-) -> DataFrame:
-    """JVM-side prototype of aggregate_alerts (see SCALE.md §alert
-    fold): per (rule, dedupe) key, collect the sorted match-timestamp
-    array and run the fixed-anchor fold as a SQL `aggregate` lambda —
-    no Python in the loop, whole plan stays in codegen.
-
-    Semantics identical to aggregate_alerts for a GLOBAL
-    (threshold, window) config (per-rule overrides would need a config
-    join; the Python fold ships them in the closure). Trade-off vs the
-    mapInPandas fold: each key's matches materialize as ONE in-memory
-    array inside the aggregation, so a pathological dedupe key with
-    10⁷ matches lands on one reducer as one array — the streaming
-    partition fold never materializes a key. ADOPTED as the batch
-    default in r10: the re-A/B at 10× match volume (194k alerts)
-    measured 0.89 vs 1.44 s min (tie at 1×), parity exact."""
-    win_us = window_seconds * 1_000_000
-    cur_t = (
-        "struct<anchor:bigint,last:bigint,cnt:bigint,created:bigint>"
-    )
-    new_cur = (
-        "named_struct('anchor', t, 'last', t, 'cnt', 1L, 'created', "
-        f"if(1 >= {threshold}, t, cast(null as bigint)))"
-    )
-    fold = F.expr(
-        f"""
-        aggregate(
-          ts_list,
-          struct(cast(array() as array<{cur_t}>) as done,
-                 cast(null as {cur_t}) as cur),
-          (acc, t) -> case
-            when acc.cur is null
-              then named_struct('done', acc.done, 'cur', {new_cur})
-            when t - acc.cur.anchor >= {win_us}L
-              then named_struct('done', array_append(acc.done, acc.cur),
-                                'cur', {new_cur})
-            else named_struct('done', acc.done,
-              'cur', named_struct(
-                'anchor', acc.cur.anchor, 'last', t,
-                'cnt', acc.cur.cnt + 1L,
-                'created', coalesce(acc.cur.created,
-                  if(acc.cur.cnt + 1L >= {threshold}L, t,
-                     cast(null as bigint)))))
-          end,
-          acc -> if(acc.cur is null, acc.done,
-                    array_append(acc.done, acc.cur))
-        )
-        """
-    )
-    alerts = (
-        matches.groupBy("rule_name", "dedupe")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.unix_micros(F.col(ts_col)))
-            ).alias("ts_list")
-        )
-        .select("rule_name", "dedupe", F.explode(fold).alias("a"))
-    )
-    us = lambda c: F.timestamp_micros(c)  # noqa: E731
-    return alerts.select(
-        "rule_name",
-        "dedupe",
-        F.md5(
-            F.concat_ws(
-                ":",
-                "rule_name",
-                "dedupe",
-                F.col("a.anchor").cast("string"),
-            )
-        ).alias("alert_id"),
-        us(F.col("a.anchor")).alias("first_matched_at"),
-        us(F.col("a.last")).alias("last_matched_at"),
-        F.col("a.cnt").alias("match_count"),
-        (F.col("a.cnt") >= threshold).alias("activated"),
-        us(F.col("a.created")).alias("created_at"),
+        .sortWithinPartitions("rule_name", "dedupe", "ts", "match_id")
+        .mapInPandas(fold_sorted, ALERT_SCHEMA)
     )
 
 

@@ -3,40 +3,37 @@ run continuously with keyed state (SURVEY.md W2/W3 Spark mapping:
 "flatMapGroupsWithState with event-time timeout = dedup window" —
 PySpark's applyInPandasWithState).
 
-State per (rule_name, dedupe): (anchor_us, count, activated) — the
-open alert. Each micro-batch folds its matches with the SAME
-recurrence as the batch operator (matano_alerts.rs:92-307 semantics)
-and emits upsert rows for every alert touched; downstream a
-`foreachBatch` MERGE keeps the alerts table current (J5 — the
-reference rewrites whole partitions; row-level upsert is the Spark
-equivalent, SURVEY §7 "alert partition rewrites").
+State per (rule_name, dedupe) is the key's open alert (STATE_SCHEMA).
+Each micro-batch sorts the key's matches by (ts, match_id) and folds
+them with `operators.alerts.fold_alerts`, starting from the state —
+the same recurrence the batch operator runs — then emits upsert rows
+for every alert it touched; downstream a `foreachBatch` MERGE keeps
+the alerts table current (J5 — the reference rewrites whole
+partitions; row-level upsert is the Spark equivalent, SURVEY §7
+"alert partition rewrites").
 
-State eviction: a key whose window expired long ago only holds 3
-ints; timeouts evict idle keys so state stays bounded by the active
-key set, not history.
+State eviction: a key whose window expired long ago only holds one
+small tuple; event-time timeouts evict idle keys so state stays
+bounded by the active key set, not history.
 """
 
 from __future__ import annotations
 
-
-from typing import Any, Iterable, Tuple
+from typing import Iterable, Tuple
 
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from matano_spark.operators.alerts import ALERT_SCHEMA, alert_id_for
-
-STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("anchor_us", T.LongType()),
-        T.StructField("count", T.LongType()),
-        T.StructField("activated", T.BooleanType()),
-        T.StructField("created_us", T.LongType()),
-        T.StructField("last_us", T.LongType()),
-    ]
+from matano_spark.operators.alerts import (
+    ALERT_SCHEMA,
+    STATE_SCHEMA,
+    alert_frame,
+    alert_row,
+    epoch_us,
+    fold_alerts,
+    rule_settings,
 )
 
 
@@ -45,63 +42,34 @@ def make_fold(
     window_seconds: int,
     rule_config: dict[str, tuple[int, int]] | None = None,
 ):
-    cfg = dict(rule_config or {})
+    settings = rule_settings(rule_config, threshold, window_seconds)
 
     def fold(
         key: Tuple[str, str],
         pdfs: Iterable[pd.DataFrame],
         state: GroupState,
     ) -> Iterable[pd.DataFrame]:
-        rule_name, dedupe = key
-        # per-rule alert config (detection.yml alert block); global
-        # defaults for rules not in the map
-        thr, win_s = cfg.get(rule_name, (threshold, window_seconds))
-        window_us = win_s * 1_000_000
         if state.hasTimedOut:
             state.remove()
             return
-        anchor_us, count, activated, created_us, last_us = (
-            state.get if state.exists else (None, 0, False, None, None)
+        rule_name, dedupe = key
+        thr, win_s = settings(rule_name)
+        prior = tuple(state.get) if state.exists else None
+        pdf = pd.concat(list(pdfs)).sort_values(
+            ["ts", "match_id"], kind="mergesort"
         )
-        emitted: dict[int, dict[str, Any]] = {}
-
-        def snapshot():
-            emitted[anchor_us] = {
-                "rule_name": rule_name,
-                "dedupe": dedupe,
-                "alert_id": alert_id_for(rule_name, dedupe, anchor_us),
-                "first_matched_at": pd.Timestamp(anchor_us, unit="us"),
-                "last_matched_at": pd.Timestamp(last_us, unit="us"),
-                "match_count": count,
-                "activated": activated,
-                "created_at": (
-                    pd.Timestamp(created_us, unit="us") if created_us else None
-                ),
-            }
-
-        for pdf in pdfs:
-            pdf = pdf.sort_values(["ts", "match_id"], kind="mergesort")
-            for t in pdf["ts"]:
-                t_us = int(pd.Timestamp(t).value // 1000)
-                if anchor_us is None or t_us - anchor_us >= window_us:
-                    anchor_us, count, activated, created_us = t_us, 0, False, None
-                count += 1
-                last_us = t_us
-                if not activated and count >= thr:
-                    activated = True
-                    created_us = t_us
-                snapshot()
-        if anchor_us is not None:
-            state.update((anchor_us, count, activated, created_us, last_us))
-            # event-time eviction: the key is dead once the WATERMARK
-            # (not wall-clock) passes 4 dedup windows beyond its last
-            # match — a replayed/backfilled stream evicts identically
-            # (SURVEY W2 "event-time timeout = dedup window")
-            state.setTimeoutTimestamp(
-                last_us // 1000 + win_s * 1000 * 4
-            )
-        if emitted:
-            yield pd.DataFrame(list(emitted.values()))
+        closed, open_alert = fold_alerts(
+            prior, epoch_us(pdf["ts"]), thr, win_s * 1_000_000
+        )
+        state.update(open_alert)
+        # event-time eviction: the key is dead once the WATERMARK
+        # (not wall-clock) passes 4 dedup windows beyond its last
+        # match — a replayed/backfilled stream evicts identically
+        # (SURVEY W2 "event-time timeout = dedup window")
+        state.setTimeoutTimestamp(open_alert[4] // 1000 + win_s * 1000 * 4)
+        # a prior alert closed without a new match is unchanged
+        touched = [a for a in closed if a != prior] + [open_alert]
+        yield alert_frame([alert_row(rule_name, dedupe, a) for a in touched])
 
     return fold
 

@@ -528,8 +528,9 @@ def alert_state_machine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W2/W3 fixed-anchor alert aggregation (ref: matano_alerts.rs:
     92-307): matches within 3600s of an alert's FIRST match join it;
     the next match after expiry opens a new alert; activation at the
-    5th match stamps created_at. Spark side is a per-key sequential
-    fold in applyInPandas (operators.alerts); the oracle replays the
+    5th match stamps created_at. Spark side is the per-key sequential
+    fold of operators.alerts (one mapInPandas pass over key-sorted
+    partitions, the recurrence streaming shares); the oracle replays the
     identical recurrence with a recursive CTE — a full value-level
     check of the state machine, not just row counts."""
     from matano_spark.operators.alerts import aggregate_alerts

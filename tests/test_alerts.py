@@ -10,6 +10,7 @@ from pyspark.sql import types as T
 
 from matano_spark.detections import DeepDict, Detection, run_detections
 from matano_spark.operators.alerts import aggregate_alerts
+from tests.alert_reference import reference_alert_rows
 
 T0 = dt.datetime(2024, 5, 1, 12, 0, 0)
 
@@ -119,17 +120,10 @@ def test_detection_harness_hooks_and_errors(spark):
     assert m.ts == T0
 
 
-def test_aggregate_alerts_sql_prototype_equivalence(spark):
-    """aggregate_alerts_sql (JVM collect_list+aggregate fold, SCALE.md
-    §alert fold) must be row-identical to the mapInPandas fold for a
-    global (threshold, window) config — bursty multi-key synthetic."""
-    from pyspark.sql import functions as F
-
-    from matano_spark.operators.alerts import (
-        aggregate_alerts,
-        aggregate_alerts_sql,
-    )
-
+def test_aggregate_alerts_per_rule_matches_reference(spark):
+    """aggregate_alerts must be row-identical to the pure-Python
+    reference fold on a bursty multi-key synthetic, with each of the
+    three rules folded under its own (threshold, window)."""
     df = spark.range(20000).select(
         F.concat(F.lit("rule"), (F.col("id") % 3).cast("string")).alias(
             "rule_name"
@@ -137,9 +131,9 @@ def test_aggregate_alerts_sql_prototype_equivalence(spark):
         F.concat(F.lit("k"), (F.col("id") % 50).cast("string")).alias("dedupe"),
         F.timestamp_micros(
             (
-                # same-key consecutive matches land 3000s apart (inside
-                # the 3600s window) with a daily wrap + jitter, so the
-                # fold exercises open/extend/activate AND re-anchor
+                # a daily wrap + jitter spreads each key's matches over
+                # one day, so every window exercises open/extend/
+                # activate AND re-anchor
                 F.lit(1700000000000000)
                 + (F.col("id") * 60000000) % 86400000000
                 + (F.col("id") % 97) * 1234567
@@ -147,16 +141,28 @@ def test_aggregate_alerts_sql_prototype_equivalence(spark):
         ).alias("ts"),
         F.col("id").alias("match_id"),
     )
-    # rule_config (same values as the global default for every rule)
-    # pins aggregate_alerts to the mapInPandas fold — with no config it
-    # now ROUTES to aggregate_alerts_sql (r10), and this test exists to
-    # compare the two implementations, not sql with itself.
-    cfg = {f"rule{i}": (3, 3600) for i in range(3)}
-    a = sorted(
-        tuple(r) for r in aggregate_alerts(df, 3, 3600, rule_config=cfg).collect()
+    cfg = {"rule0": (3, 3600), "rule1": (1, 900), "rule2": (5, 7200)}
+    # small Arrow batches split keys across batches, so the fold must
+    # carry a key's open alert from one batch to the next
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        got = sorted(
+            tuple(r)
+            for r in aggregate_alerts(df, 2, 600, rule_config=cfg).collect()
+        )
+    finally:
+        spark.conf.set(key, before)
+    expect = reference_alert_rows(
+        [tuple(r) for r in df.select("rule_name", "dedupe", "ts").collect()],
+        cfg,
     )
-    b = sorted(tuple(r) for r in aggregate_alerts_sql(df, 3, 3600).collect())
-    assert a == b
-    counts = {r[5] for r in a}  # match_count column
+    assert got == expect
+    counts = {r[5] for r in got}  # match_count column
     assert any(c > 1 for c in counts)  # multi-match alerts exercised
-    assert len(a) > 150  # more alerts than keys: re-anchor exercised
+    assert len(got) > 150  # more alerts than keys: re-anchor exercised
+    # every rule folded under its own config: rule1 (threshold 1)
+    # activates every alert, rule2 (threshold 5) leaves some pending
+    assert all(r[6] for r in got if r[0] == "rule1")
+    assert not all(r[6] for r in got if r[0] == "rule2")

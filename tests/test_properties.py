@@ -11,33 +11,9 @@ from pyspark.sql import types as T
 
 from matano_spark.operators.alerts import aggregate_alerts
 from matano_spark.schema.cast import apply_schema
+from tests.alert_reference import reference_fold
 
 T0 = dt.datetime(2024, 5, 1, 0, 0, 0)
-
-
-def reference_fold(offsets, threshold, window_s):
-    """Pure-Python oracle of the fixed-anchor recurrence
-    (matano_alerts.rs:92-307 semantics)."""
-    alerts = []
-    anchor = None
-    cur = None
-    for off in sorted(offsets):
-        t = T0 + dt.timedelta(seconds=off)
-        if anchor is None or (t - anchor).total_seconds() >= window_s:
-            if cur:
-                alerts.append(cur)
-            anchor = t
-            cur = {"first": t, "last": t, "n": 1, "act": 1 >= threshold,
-                   "created": t if 1 >= threshold else None}
-        else:
-            cur["n"] += 1
-            cur["last"] = t
-            if not cur["act"] and cur["n"] >= threshold:
-                cur["act"] = True
-                cur["created"] = t
-    if cur:
-        alerts.append(cur)
-    return alerts
 
 
 # One spark-backed hypothesis test keeps runtime sane: moderate examples,
@@ -71,7 +47,11 @@ def test_alert_state_machine_matches_reference(spark_global, offsets, threshold,
     )
     expect = sorted(
         (a["first"], a["last"], a["n"], a["act"], a["created"])
-        for a in reference_fold(offsets, threshold, window_minutes * 60)
+        for a in reference_fold(
+            [T0 + dt.timedelta(seconds=off) for off in offsets],
+            threshold,
+            window_minutes * 60,
+        )
     )
     assert got == expect
 

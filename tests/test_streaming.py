@@ -364,3 +364,117 @@ def test_late_match_within_watermark_folds_into_alert(spark, tmpdir):
     assert second["match_count"] == 1
     assert second["first_matched_at"] == t0 + dt.timedelta(minutes=40)
     assert first["alert_id"] != second["alert_id"]
+
+
+def _stream_upserts(spark, src, ckpt, **kwargs):
+    """Run `streaming_alerts` over the match files in `src`, one file
+    per micro-batch in mtime order; returns each alert_id's last upsert."""
+    from matano_spark.streaming.alerting import streaming_alerts
+
+    matches = (
+        spark.readStream.format("json")
+        .schema(MATCH_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .load(str(src))
+    )
+    last = {}
+
+    def keep_last(batch, epoch_id):
+        for r in batch.collect():
+            last[r.alert_id] = r
+
+    q = (
+        streaming_alerts(matches, **kwargs)
+        .writeStream.foreachBatch(keep_last)
+        .outputMode("update")
+        .option("checkpointLocation", str(ckpt))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(240)
+    return sorted(last.values())
+
+
+def test_stream_equals_batch_for_in_order_batches(spark, tmpdir):
+    """In-order matches fold to the same alerts in streaming as in batch,
+    whether they arrive as 1, 2 or 3 micro-batches, with per-rule
+    (threshold, window) config."""
+    import random
+
+    from matano_spark.operators.alerts import aggregate_alerts
+
+    t0 = dt.datetime(2024, 5, 1, 12, 0, 0)
+    rnd = random.Random(7)
+    rows = sorted(
+        (
+            t0 + dt.timedelta(seconds=rnd.randrange(4 * 3600)),
+            rnd.choice(["fast", "slow"]),
+            rnd.choice(["k1", "k2", "k3"]),
+        )
+        for _ in range(90)
+    )
+    matches = [
+        (rule, dd, ts.isoformat(), f"m{i:03d}")
+        for i, (ts, rule, dd) in enumerate(rows)
+    ]
+    cfg = {"fast": (2, 600), "slow": (4, 3600)}
+    batch = sorted(
+        tuple(r)
+        for r in aggregate_alerts(
+            spark.createDataFrame(
+                [(r, d, dt.datetime.fromisoformat(ts), m) for r, d, ts, m in matches],
+                MATCH_SCHEMA,
+            ),
+            rule_config=cfg,
+        ).collect()
+    )
+    assert len(batch) > 6  # more alerts than keys: re-anchor exercised
+
+    for n_batches in (1, 2, 3):
+        src = tmpdir / f"m{n_batches}"
+        src.mkdir()
+        size = -(-len(matches) // n_batches)
+        for b in range(n_batches):
+            _write_matches(
+                src, f"b{b}.json", matches[b * size:(b + 1) * size],
+                1_700_000_000 + 100 * b,
+            )
+        got = _stream_upserts(
+            spark, src, tmpdir / f"ck{n_batches}", rule_config=cfg
+        )
+        assert got == batch, f"{n_batches} micro-batches"
+
+
+def test_streaming_fold_at_epoch_zero_keeps_created_at():
+    """A threshold-1 alert activating at 1970-01-01T00:00:00Z keeps its
+    created_at in the streaming fold, as in batch. The fold is driven
+    directly with a GroupState: Spark's watermark filter drops event
+    times at or below the first batch's watermark (0), so a match at
+    epoch 0 never reaches the fold through a stream."""
+    import pandas as pd
+    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+    from matano_spark.streaming.alerting import STATE_SCHEMA, make_fold
+
+    state = GroupState(
+        optionalValue=None, batchProcessingTimeMs=0, eventTimeWatermarkMs=0,
+        timeoutConf=GroupStateTimeout.EventTimeTimeout, hasTimedOut=False,
+        watermarkPresent=True, defined=False, updated=False, removed=False,
+        timeoutTimestamp=GroupState.NO_TIMESTAMP, keyAsUnsafe=b"",
+        valueSchema=STATE_SCHEMA,
+    )
+    pdf = pd.DataFrame(
+        {
+            "rule_name": ["r"],
+            "dedupe": ["k"],
+            "ts": pd.to_datetime(["1970-01-01T00:00:00"]),
+            "match_id": ["m0"],
+        }
+    )
+    (out,) = make_fold(1, 3600)(("r", "k"), iter([pdf]), state)
+    assert len(out) == 1
+    a = out.iloc[0]
+    assert a["activated"]
+    assert a["first_matched_at"] == pd.Timestamp(0)
+    assert a["created_at"] == pd.Timestamp(0)
+    assert state.get == (0, 1, True, 0, 0)
