@@ -183,11 +183,14 @@ class LakeTable:
         )
         return self.spark.read.schema(T.StructType(fields)).parquet(self.path)
 
-    def read_hours(self, start_hour: str, end_hour: str) -> DataFrame:
+    def read_hours(
+        self, start_hour: str, end_hour: str, schema=None
+    ) -> DataFrame:
         """Partition-pruned read over [start_hour, end_hour] — the
         'last day of partitions' alert-state scan shape
-        (matano_alerts.rs:578-601)."""
-        df = self.read()
+        (matano_alerts.rs:578-601). `schema` is passed to `read`: with
+        it, planning starts no schema-inference job."""
+        df = self.read(schema)
         return df.filter(
             (F.col("ts_hour") >= start_hour) & (F.col("ts_hour") <= end_hour)
         )

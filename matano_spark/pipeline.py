@@ -9,14 +9,23 @@ VRL-text transform compiles per table, schema.cast sidelines rows
 that cannot coerce to the resolved schema, and lake.LakeTable lands
 hour-partitioned output. Mirrors the reference's §3.1 lifecycle with
 one DAG per table instead of four Lambdas.
+
+Per call, a table pays its plan build only on the first batch of a
+new input schema: the transform replays its memoized compile
+(transform.compiler), and the full-schema projection and landing casts
+are cached per schema pair. The row counts come from an observation
+on the landing write, so a table lands in one write job; the
+quarantine write runs only when that job saw a sidelined row.
 """
 
 from __future__ import annotations
 
 import os
+from functools import lru_cache
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from matano_spark.lake import LakeTable
 from matano_spark.schema.cast import apply_schema
@@ -67,6 +76,39 @@ def _read_raw(spark: SparkSession, td: TableDef, raw_path: str) -> DataFrame:
     return payload
 
 
+@lru_cache(maxsize=64)
+def _full_schema_columns(
+    src: T.StructType, schema: T.StructType
+) -> tuple[Column, ...]:
+    """The projection to the FULL resolved schema (the resolved schema
+    IS the table schema, batch content notwithstanding): declared fields
+    the transform never assigned land as typed nulls, extra working
+    columns are dropped. Built once per (transform output, table)
+    schema pair."""
+    present = set(src.names)
+    return tuple(
+        F.col(f"`{f.name}`")
+        if f.name in present
+        else F.lit(None).cast(f.dataType).alias(f.name)
+        for f in schema.fields
+    )
+
+
+def _landed_counts(
+    counts: Observation, good: DataFrame, bad: DataFrame
+) -> tuple[int, int]:
+    """(rows in, rows sidelined), as observed by the job that landed
+    `good`. When that job wrote no row, AQE replaces the observed stage
+    with an empty relation and the observation completes with an empty
+    row, which `Observation.get` cannot convert; count both sides
+    instead — an all-sidelined or empty batch, so both jobs are small."""
+    if counts._jo.getRow().length() == 0:
+        n_bad = bad.count()
+        return good.count() + n_bad, n_bad
+    m = counts.get
+    return m["rows"], m["bad"]
+
+
 def run_log_source(
     spark: SparkSession,
     config_dir: str,
@@ -89,22 +131,12 @@ def run_log_source(
             # this batch — at scale one job per table is the norm
             continue
         raw = _read_raw(spark, td, raw_path)
-        normalized = td.pipeline(raw).persist()
-        rows_transformed = normalized.count()
-        # project to the FULL resolved schema (the resolved schema IS the
-        # table schema, batch content notwithstanding): declared fields the
-        # transform never assigned land as typed nulls, extra working
-        # columns are dropped
-        present = set(normalized.columns)
+        normalized = td.pipeline(raw)
         projected = normalized.select(
-            *[
-                F.col(f"`{f.name}`")
-                if f.name in present
-                else F.lit(None).cast(f.dataType).alias(f.name)
-                for f in td.schema.fields
-            ]
+            *_full_schema_columns(normalized.schema, td.schema)
         )
-        good, bad = apply_schema(projected, td.schema)
+        counts = Observation()
+        good, bad = apply_schema(projected, td.schema, counts)
         table = LakeTable(
             spark,
             f"{td.log_source}_{td.name}",
@@ -112,12 +144,11 @@ def run_log_source(
             use_iceberg=False,
         )
         table.append(good)
-        n_bad = bad.count()
+        rows_transformed, n_bad = _landed_counts(counts, good, bad)
         if quarantine_root is not None and n_bad:
             bad.withColumn("log_source", F.lit(td.log_source)).write.mode(
                 "append"
             ).parquet(os.path.join(quarantine_root, td.log_source))
-        normalized.unpersist()
         out[td.name] = TableResult(
             table=table,
             rows_in=rows_transformed,

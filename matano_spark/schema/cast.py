@@ -10,7 +10,9 @@ the failing field names — the quarantine channel's error_kind."""
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from functools import lru_cache
+
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -74,20 +76,21 @@ def _coerce(col: Column, src: T.DataType | None, dst: T.DataType) -> tuple[Colum
     return out, [F.coalesce(flag, F.lit(False))]
 
 
-def apply_schema(
-    df: DataFrame, schema: T.StructType
-) -> tuple[DataFrame, DataFrame]:
-    """Cast df to the declared schema. Returns (good, bad):
-    good — declared columns, coerced; bad — original rows + the
-    `mismatch_fields` array naming the leaves that failed."""
-    src_types = {f.name: f.dataType for f in df.schema.fields}
+@lru_cache(maxsize=64)
+def _schema_plan(
+    src: T.StructType, schema: T.StructType
+) -> tuple[tuple[Column, ...], Column]:
+    """(cast columns, mismatch-list column) landing a frame of schema
+    `src` in `schema`. Built once per schema pair: the Columns hold
+    names only, so every frame of that schema reuses them."""
+    src_types = {f.name: f.dataType for f in src.fields}
     out_cols: list[Column] = []
     flag_cols: list[Column] = []
     flag_names: list[str] = []
     for f in schema.fields:
-        src = src_types.get(f.name)
+        src_t = src_types.get(f.name)
         base = F.col(f"`{f.name}`") if f.name in src_types else F.lit(None)
-        c, flags = _coerce(base, src, f.dataType)
+        c, flags = _coerce(base, src_t, f.dataType)
         out_cols.append(c.cast(f.dataType).alias(f.name))
         for i, fl in enumerate(flags):
             flag_cols.append(fl)
@@ -100,10 +103,34 @@ def apply_schema(
             ]
         )
     ) if flag_cols else F.array().cast("array<string>")
+    return tuple(out_cols), mismatches
+
+
+def apply_schema(
+    df: DataFrame, schema: T.StructType, counts: Observation | None = None
+) -> tuple[DataFrame, DataFrame]:
+    """Cast df to the declared schema. Returns (good, bad):
+    good — declared columns, coerced; bad — original rows + the
+    `mismatch_fields` array naming the leaves that failed.
+
+    With `counts`, the first action on `good` also observes `rows`
+    (all input rows) and `bad` (rows with a mismatch), so landing
+    `good` counts both sides in its own job. Both sides then read the
+    observed frame, whose CollectMetrics node also keeps the split
+    filters from being pushed into (and inlining) the transform's
+    projections."""
+    out_cols, mismatches = _schema_plan(df.schema, schema)
     tagged = df.withColumn("__mismatch", mismatches)
-    good = tagged.filter(F.size("__mismatch") == 0).select(*out_cols)
+    landed = tagged
+    if counts is not None:
+        landed = tagged.observe(
+            counts,
+            F.count(F.lit(1)).alias("rows"),
+            F.count_if(F.size("__mismatch") > 0).alias("bad"),
+        )
+    good = landed.filter(F.size("__mismatch") == 0).select(*out_cols)
     bad = (
-        tagged.filter(F.size("__mismatch") > 0)
+        landed.filter(F.size("__mismatch") > 0)
         .withColumnRenamed("__mismatch", "mismatch_fields")
     )
     return good, bad

@@ -105,6 +105,7 @@ def run_streaming_alerts_to_dir(
     checkpoint_dir: str,
     threshold: int = 1,
     window_seconds: int = 3600,
+    rule_config: dict[str, tuple[int, int]] | None = None,
 ):
     """Sink the alert upserts: per micro-batch, last-writer-wins MERGE
     into a parquet state table keyed by alert_id (Iceberg MERGE INTO
@@ -119,7 +120,9 @@ def run_streaming_alerts_to_dir(
     (lake_writer/src/matano_alerts.rs:51-56,578-601); here the bound
     is exact because the state machine can only touch anchors within
     the open dedup window."""
-    alerts = streaming_alerts(matches, threshold, window_seconds)
+    alerts = streaming_alerts(
+        matches, threshold, window_seconds, rule_config=rule_config
+    )
 
     def merge_batch(batch: DataFrame, epoch_id: int) -> None:
         spark = batch.sparkSession

@@ -30,7 +30,9 @@ from __future__ import annotations
 
 import itertools
 import os
+import threading
 import time
+from collections import OrderedDict
 from typing import Any, Iterable
 
 from pyspark.sql import Column, DataFrame
@@ -2332,16 +2334,50 @@ def _const_var_names(steps) -> set:
         const = nxt
 
 
+# Compiled-stage memo, the analog of the reference's per-(source,
+# schema) VRL program LRU (shared/src/vrl_util.rs): (program
+# fingerprint, stage index, stage input schema, chunk settings) → the
+# filter/select ops that stage's compile emitted. The Columns hold
+# unresolved names only, so a hit replays them on any frame of that
+# schema — about 25 filter/select calls for the okta pack, where a
+# compile makes about 20k py4j round trips building Column trees.
+_STAGE_MEMO: OrderedDict = OrderedDict()
+_STAGE_MEMO_SIZE = 64
+_STAGE_MEMO_LOCK = threading.Lock()
+
+
+def _run_op(df: DataFrame, op: tuple) -> DataFrame:
+    kind, arg = op
+    return df.filter(arg) if kind == "filter" else df.select(*arg)
+
+
+def _memo_get(key: tuple) -> list | None:
+    with _STAGE_MEMO_LOCK:
+        ops = _STAGE_MEMO.get(key)
+        if ops is not None:
+            _STAGE_MEMO.move_to_end(key)
+        return ops
+
+
+def _memo_put(key: tuple, ops: list) -> None:
+    with _STAGE_MEMO_LOCK:
+        _STAGE_MEMO[key] = ops
+        while len(_STAGE_MEMO) > _STAGE_MEMO_SIZE:
+            _STAGE_MEMO.popitem(last=False)
+
+
 def compile_pipeline(steps: Iterable[ast.Step]):
     """Compile steps into a DataFrame -> DataFrame transformation.
 
     One filter() (all aborts) + one select() (all writes) per stage;
     Enrich steps split the program into stages joined by broadcast
-    lookups (VRL's get_enrichment_table_record boundary). The program
-    compiles per input schema — the analog of the reference's
-    per-(source, schema) VRL program cache.
+    lookups (VRL's get_enrichment_table_record boundary). Each steps
+    stage compiles once per input schema (`_STAGE_MEMO`); later applies
+    replay the memoized ops.
     """
     steps = tuple(steps)
+    # stable across reloads of the same pack (dataclass reprs)
+    fingerprint = repr(steps)
     stages: list[tuple] = []
     cur: list = []
     wg_counter = itertools.count()
@@ -2369,17 +2405,9 @@ def compile_pipeline(steps: Iterable[ast.Step]):
     fixed_chunk = os.environ.get("MATANO_VRL_STAGE_CHUNK")
     chunk_n = int(fixed_chunk) if fixed_chunk else 12
     slow_chunk_s = float(os.environ.get("MATANO_VRL_CHUNK_SLOW_S", "1.5"))
-    # Per-stage replay cache: the first apply() records the EMITTED
-    # chunk lengths (after all cut rules and any shrink trial); later
-    # applies of the same compiled program replay them verbatim. A
-    # bench/streaming caller re-applies the same pipeline per
-    # repeat/micro-batch — without the cache every apply re-ran the
-    # shrink trial, paying the rolled-back slow chunk AGAIN (measured
-    # ~2.4 s wasted per apply on the verbatim cloudtrail program) and
-    # letting wall-clock jitter change the plan shape run to run.
-    chunk_plan: dict[int, list[int]] = {}
+    chunk_setting = (fixed_chunk, slow_chunk_s)
 
-    def apply_steps(df: DataFrame, stage_steps, stage_idx: int = -1) -> DataFrame:
+    def apply_steps(df: DataFrame, stage_steps, ops: list) -> DataFrame:
         # compile in CHUNKS of top-level steps with a projection
         # boundary between them: expressions that python shares as a
         # DAG expand to a TREE at Column→Catalyst conversion, so one
@@ -2389,7 +2417,12 @@ def compile_pipeline(steps: Iterable[ast.Step]):
         # reference attributes, not re-inlined trees. Locals and the
         # root remainder spill to __var_* / __root_rest columns and
         # rehydrate in the next chunk; Catalyst's CollapseProject
-        # keeps non-duplicating projections cheap at runtime.
+        # keeps non-duplicating projections cheap at runtime. Every
+        # filter/select lands in `ops`, the stage's memo entry.
+        def emit(frame: DataFrame, op: tuple) -> DataFrame:
+            ops.append(op)
+            return _run_op(frame, op)
+
         out = df
         remaining = list(stage_steps)
         # positional carry between chunks: intermediate boundaries
@@ -2404,16 +2437,11 @@ def compile_pipeline(steps: Iterable[ast.Step]):
         prev_tombstones: set = set()
         cur_n = chunk_n
         trial: dict | str | None = None
-        replay = chunk_plan.get(stage_idx)
-        rec: list[int] = []
         ci = 0
         while True:
             t0 = time.monotonic()
-            snapshot = (out, carry, const_carry, set(prev_tombstones))
-            if replay is not None:
-                chunk_l = list(remaining[: replay[ci]])
-            else:
-                chunk_l = list(remaining[:cur_n])
+            snapshot = (out, carry, const_carry, set(prev_tombstones), len(ops))
+            chunk_l = list(remaining[:cur_n])
             # Isolate root-spread assigns (`. = merge(., x, deep:
             # true)`) into single-step chunks: the merge folds x's
             # value expression into the row ONCE PER TOP-LEVEL FIELD,
@@ -2426,7 +2454,7 @@ def compile_pipeline(steps: Iterable[ast.Step]):
             rebuilds: dict = {}
             exp_rows: set = set()
             exp_vars: set = set()
-            for j, s in enumerate(chunk_l if replay is None else ()):
+            for j, s in enumerate(chunk_l):
                 if _is_root_assign(s):
                     chunk_l = chunk_l[:j] if j else chunk_l[:1]
                     break
@@ -2494,7 +2522,7 @@ def compile_pipeline(steps: Iterable[ast.Step]):
             comp.run(chunk)
             prev_tombstones = state.tombstones
             for f in state.filters:
-                out = out.filter(f)
+                out = emit(out, ("filter", f))
             # materialize through temp names, then rename: an output
             # that reuses an input name with a CHANGED type (json
             # re-emitted as its mutated map form) must not shadow
@@ -2544,14 +2572,21 @@ def compile_pipeline(steps: Iterable[ast.Step]):
                 # reuse instead of tree duplication, exactly what we
                 # want at 100 TB. Chunk 0 stays scan-adjacent, so
                 # parquet column/nested-schema pruning still sees the
-                # first projection.
-                out = out.select(
-                    *[c.alias(f"__o{ci}_{i}") for i, c in enumerate(cols)]
-                ).filter(F.monotonically_increasing_id() >= 0)
+                # first projection. The condition is built on rand,
+                # which (unlike monotonically_increasing_id) streaming
+                # accepts; a bare `rand >= 0` would not do, because
+                # OptimizeRand folds a comparison of rand with a
+                # constant outside [0, 1) to a literal.
+                out = emit(
+                    out,
+                    ("select", [c.alias(f"__o{ci}_{i}") for i, c in enumerate(cols)]),
+                )
+                out = emit(out, ("filter", F.rand(0) + 1 > 0))
                 carry = entries
             else:
-                tmp = out.select(
-                    *[c.alias(f"__out_{i}") for i, c in enumerate(cols)]
+                tmp = emit(
+                    out,
+                    ("select", [c.alias(f"__out_{i}") for i, c in enumerate(cols)]),
                 )
                 # final projection: void-typed outputs (reads of
                 # deleted keys, explicit nulls) fail parquet sinks —
@@ -2560,17 +2595,21 @@ def compile_pipeline(steps: Iterable[ast.Step]):
                 final_types = {
                     f.name: f.dataType for f in tmp.schema.fields
                 }
-                out = tmp.select(
-                    *[
-                        (
-                            F.col(f"`__out_{i}`").cast("string")
-                            if isinstance(
-                                final_types[f"__out_{i}"], T.NullType
-                            )
-                            else F.col(f"`__out_{i}`")
-                        ).alias(name)
-                        for i, (_k, name) in enumerate(entries)
-                    ]
+                out = emit(
+                    tmp,
+                    (
+                        "select",
+                        [
+                            (
+                                F.col(f"`__out_{i}`").cast("string")
+                                if isinstance(
+                                    final_types[f"__out_{i}"], T.NullType
+                                )
+                                else F.col(f"`__out_{i}`")
+                            ).alias(name)
+                            for i, (_k, name) in enumerate(entries)
+                        ],
+                    ),
                 )
             dt = time.monotonic() - t0
             if os.environ.get("MATANO_VRL_CHUNK_DEBUG"):
@@ -2592,7 +2631,8 @@ def compile_pipeline(steps: Iterable[ast.Step]):
             # run. Chunk shape is now deterministic: fixed size 12,
             # expensive-statement isolation, rebuild caps, and a
             # shrink trial that only fires on measured slow compiles
-            # (shrinking is always execution-safe).
+            # (shrinking is always execution-safe). The trial runs once
+            # per memo key; later applies replay the chosen shape.
             #
             # SHRINK guard. Per-chunk driver cost has two parts:
             # (a) per-boundary reanalysis of the whole accumulated
@@ -2609,7 +2649,7 @@ def compile_pipeline(steps: Iterable[ast.Step]):
             # if the trial actually beat the slow chunk. Measured:
             # eve 195 s → ~38 s (trial accepted), fdr stays within
             # ~1.2× of its fixed-12 time (trial rejected).
-            if fixed_chunk is None and replay is None:
+            if fixed_chunk is None:
                 if (
                     trial is None
                     and cur_n > 6
@@ -2618,7 +2658,8 @@ def compile_pipeline(steps: Iterable[ast.Step]):
                 ):
                     cur_n = max(6, cur_n // 2)
                     trial = {"left": len(chunk), "cost": 0.0, "base": dt}
-                    out, carry, const_carry, prev_tombstones = snapshot
+                    out, carry, const_carry, prev_tombstones, n_ops = snapshot
+                    del ops[n_ops:]
                     remaining = list(chunk) + remaining
                     continue
                 if isinstance(trial, dict):
@@ -2628,12 +2669,9 @@ def compile_pipeline(steps: Iterable[ast.Step]):
                         if trial["cost"] > 0.6 * trial["base"]:
                             cur_n = chunk_n  # shrink didn't pay
                         trial = "done"
-            rec.append(len(chunk))
             if is_last:
                 break
             ci += 1
-        if replay is None and stage_idx >= 0:
-            chunk_plan[stage_idx] = rec
         return out
 
     def apply_enrich(df: DataFrame, step: ast.Enrich) -> DataFrame:
@@ -2661,11 +2699,20 @@ def compile_pipeline(steps: Iterable[ast.Step]):
     def apply(df: DataFrame) -> DataFrame:
         out = df
         for si, (kind, payload) in enumerate(stages):
-            if kind == "steps":
-                if payload:
-                    out = apply_steps(out, payload, si)
-            else:
+            if kind == "enrich":
                 out = apply_enrich(out, payload)
+                continue
+            if not payload:
+                continue
+            key = (fingerprint, si, out.schema.json(), chunk_setting)
+            ops = _memo_get(key)
+            if ops is None:
+                ops = []
+                out = apply_steps(out, payload, ops)
+                _memo_put(key, ops)
+            else:
+                for op in ops:
+                    out = _run_op(out, op)
         return out
 
     return apply

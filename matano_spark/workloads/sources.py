@@ -106,19 +106,6 @@ def _table_def(pack: str, table: str):
     raise KeyError(f"{pack}/{table}")
 
 
-# Applied-pipeline PLAN cache: (table def, read set, session, input
-# plan) → the already-built output DataFrame. Applying a compiled
-# pipeline builds thousands of Column expressions through py4j
-# (~0.6 s/apply for the okta pack — measured r10), and the bench
-# re-builds the same query every repeat. This memoizes PLAN
-# construction only — the DataFrame is lazy, every action still
-# computes from the parquet inputs (the same tier as the compiler's
-# chunk-shape replay cache and the reference's LRU-400 VRL program
-# cache). Keyed on the CANONICALIZED analyzed input plan, so a
-# different sf_dir / source frame can never hit a stale entry.
-_APPLIED_PLAN_CACHE: dict = {}
-
-
 def _through_pipeline(td, raw: DataFrame, needed: tuple[str, ...] | None = None) -> DataFrame:
     """Run a synthesized raw frame through the pack pipeline, mirroring
     pipeline._read_raw's parse step for json-with-input_fields packs.
@@ -135,23 +122,9 @@ def _through_pipeline(td, raw: DataFrame, needed: tuple[str, ...] | None = None)
     if td.ingest.get("input_fields") and "json" in raw.columns:
         schema = fields_to_structtype(td.ingest["input_fields"])
         raw = raw.select(F.from_json("json", schema).alias("r")).select("r.*")
-    try:
-        plan_key = (
-            raw._jdf.queryExecution().analyzed().canonicalized().toString()
-        )
-    except Exception:  # noqa: BLE001 — cache is best-effort
-        plan_key = None
-    key = (id(td), needed, raw.sparkSession, plan_key)
-    if plan_key is not None and key in _APPLIED_PLAN_CACHE:
-        return _APPLIED_PLAN_CACHE[key]
     # needed: the consumer's read set — projection pushdown THROUGH the
     # transform (backward liveness slice, transform/slice.py)
-    out = td.pipeline_for(needed)(raw) if needed else td.pipeline(raw)
-    if plan_key is not None:
-        if len(_APPLIED_PLAN_CACHE) >= 32:
-            _APPLIED_PLAN_CACHE.pop(next(iter(_APPLIED_PLAN_CACHE)))
-        _APPLIED_PLAN_CACHE[key] = out
-    return out
+    return td.pipeline_for(needed)(raw) if needed else td.pipeline(raw)
 
 
 def _okta_raw(ev: DataFrame) -> DataFrame:

@@ -153,3 +153,22 @@ def test_merge_by_key_keeps_rows_on_uri_path(spark, tmpdir):
     got = {r.id: r.v for r in t.read().collect()}
     assert got == {"a": 1, "b": 20, "c": 30}
     assert not (tmpdir / "st.tmp").exists()
+
+
+def test_read_hours_with_schema_starts_no_job(spark, tmpdir):
+    """With the resolved schema, a pruned read plans without the
+    schema-inference job a bare parquet read starts."""
+    t = LakeTable(spark, "ev", str(tmpdir / "ev"), use_iceberg=False)
+    t.append(_df(spark, [("a", 0, 1), ("b", 1, 2), ("c", 3, 3)]))
+    schema = _df(spark, []).schema
+    sc = spark.sparkContext
+    group = "lake-read-hours-probe"
+    sc.setJobGroup(group, "probe")
+    try:
+        pruned = t.read_hours("2024-05-01-10", "2024-05-01-11", schema)
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert jobs == []
+    assert sorted(r.id for r in pruned.collect()) == ["a", "b"]

@@ -445,6 +445,54 @@ def test_stream_equals_batch_for_in_order_batches(spark, tmpdir):
         assert got == batch, f"{n_batches} micro-batches"
 
 
+def test_alert_sink_applies_rule_config(spark, tmpdir):
+    """run_streaming_alerts_to_dir folds each rule with its own
+    (threshold, window): the sink's table equals the batch fold with
+    the same rule_config."""
+    from matano_spark.operators.alerts import ALERT_SCHEMA, aggregate_alerts
+
+    t0 = dt.datetime(2024, 5, 1, 12, 0, 0)
+    rows = [
+        (rule, dd, t0 + dt.timedelta(minutes=m), f"{rule}-{dd}-{m}")
+        for rule, dd, minutes in [
+            ("fast", "k1", (0, 3, 8, 20, 22)),
+            ("fast", "k2", (1,)),
+            ("slow", "k1", (0, 10, 30, 50, 70)),
+        ]
+        for m in minutes
+    ]
+    cfg = {"fast": (2, 600), "slow": (3, 3600)}
+    batch = sorted(
+        tuple(r)
+        for r in aggregate_alerts(
+            spark.createDataFrame(rows, MATCH_SCHEMA), rule_config=cfg
+        ).collect()
+    )
+    src = tmpdir / "m"
+    src.mkdir()
+    ordered = sorted(rows, key=lambda r: r[2])
+    for b, part in enumerate((ordered[:6], ordered[6:])):
+        _write_matches(
+            src, f"b{b}.json",
+            [(r, d, ts.isoformat(), m) for r, d, ts, m in part],
+            1_700_000_000 + 100 * b,
+        )
+    matches = (
+        spark.readStream.format("json")
+        .schema(MATCH_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .load(str(src))
+    )
+    out_dir = str(tmpdir / "alerts")
+    q = run_streaming_alerts_to_dir(
+        matches, out_dir, str(tmpdir / "ck"), rule_config=cfg
+    )
+    q.awaitTermination(240)
+    sunk = spark.read.parquet(out_dir).select(*ALERT_SCHEMA.names)
+    assert sorted(tuple(r) for r in sunk.collect()) == batch
+    assert {r[0] for r in batch} == {"fast", "slow"}
+
+
 def test_streaming_fold_at_epoch_zero_keeps_created_at():
     """A threshold-1 alert activating at 1970-01-01T00:00:00Z keeps its
     created_at in the streaming fold, as in batch. The fold is driven
