@@ -54,3 +54,23 @@ def write_text(
 def delete(spark: SparkSession, path: str, recursive: bool = True) -> None:
     fs, p = fs_path(spark, path)
     fs.delete(p, recursive)
+
+
+def glob(spark: SparkSession, pattern: str) -> list[str]:
+    """Paths matching the Hadoop glob `pattern` ([] when none does).
+    The listing crosses py4j as one string, not as a call per entry."""
+    fs, p = fs_path(spark, pattern)
+    found = fs.globStatus(p)
+    if found is None:
+        return []
+    jvm = spark._jvm
+    paths = jvm.org.apache.hadoop.fs.FileUtil.stat2Paths(found)
+    return jvm.scala.Predef.genericWrapArray(paths).mkString("\n").splitlines()
+
+
+def rename(spark: SparkSession, src: str, dst: str) -> None:
+    """Move the file at `src` to `dst`, making `dst`'s parent first."""
+    fs, d = fs_path(spark, dst)
+    fs.mkdirs(d.getParent())
+    if not fs.rename(fs_path(spark, src)[1], d):
+        raise OSError(f"rename {src} -> {dst} failed")

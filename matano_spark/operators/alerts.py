@@ -17,12 +17,18 @@ plain Python over one key's matches in time order, and both engines
 run it: `aggregate_alerts` (batch: repartition by key, sort, one
 mapInPandas pass) and matano_spark.streaming.alerting
 (applyInPandasWithState, starting from the key's GroupState). The open
-alert is a STATE_SCHEMA tuple; `alert_row` turns one into an
-ALERT_SCHEMA row.
+alert is a STATE_SCHEMA tuple; `alert_row` turns one into a FOLD_SCHEMA
+row, and `alert_instants` turns those into ALERT_SCHEMA rows.
 
-Alert ids are deterministic: md5(rule:dedupe:epoch_us(first_matched_at))
-— replayable, idempotent on reprocessing, and oracle-checkable (the
-reference mints uuids; determinism is strictly stronger).
+Event time enters the Python fold as `unix_micros(ts)` and leaves it as
+micros that `timestamp_micros` turns back into timestamps in the JVM.
+Python never sees a timestamp, which pandas would render in the session
+zone, so alerts do not depend on it.
+
+Alert ids are deterministic: md5(rule:dedupe:<UTC epoch µs of
+first_matched_at>) — replayable, idempotent on reprocessing, and
+oracle-checkable (the reference mints uuids; determinism is strictly
+stronger).
 """
 
 from __future__ import annotations
@@ -32,6 +38,7 @@ from itertools import groupby
 
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 ALERT_SCHEMA = T.StructType(
@@ -47,17 +54,28 @@ ALERT_SCHEMA = T.StructType(
     ]
 )
 
+# what the Python fold emits: ALERT_SCHEMA with its instants as UTC
+# epoch micros
+FOLD_SCHEMA = T.StructType(
+    [
+        T.StructField(f.name, T.LongType())
+        if isinstance(f.dataType, T.TimestampType)
+        else f
+        for f in ALERT_SCHEMA.fields
+    ]
+)
+
 # typed columns — an untyped empty frame infers float64 and fails the
-# Arrow cast to timestamp
+# Arrow cast; created_at is nullable, so it takes pandas' nullable ints
 ALERT_DTYPES = {
     "rule_name": "object",
     "dedupe": "object",
     "alert_id": "object",
-    "first_matched_at": "datetime64[ns]",
-    "last_matched_at": "datetime64[ns]",
+    "first_matched_at": "int64",
+    "last_matched_at": "int64",
     "match_count": "int64",
     "activated": "bool",
-    "created_at": "datetime64[ns]",
+    "created_at": "Int64",
 }
 
 # the open alert of one (rule_name, dedupe) key
@@ -88,10 +106,6 @@ def rule_settings(
     return lambda rule: cfg.get(rule, (threshold, window_seconds))
 
 
-def epoch_us(ts: pd.Series) -> list[int]:
-    return ts.to_numpy("datetime64[us]").astype("int64").tolist()
-
-
 def fold_alerts(
     state: tuple | None, ts_us: list[int], threshold: int, window_us: int
 ) -> tuple[list[tuple], tuple | None]:
@@ -117,24 +131,33 @@ def fold_alerts(
 
 def alert_row(rule_name: str, dedupe: str, state: tuple) -> dict:
     anchor_us, count, activated, created_us, last_us = state
-    # nanosecond Timestamps: the frame's datetime64[ns] columns take
-    # them without a per-value conversion
     return {
         "rule_name": rule_name,
         "dedupe": dedupe,
         "alert_id": alert_id_for(rule_name, dedupe, anchor_us),
-        "first_matched_at": pd.Timestamp(anchor_us * 1000),
-        "last_matched_at": pd.Timestamp(last_us * 1000),
+        "first_matched_at": anchor_us,
+        "last_matched_at": last_us,
         "match_count": count,
         "activated": activated,
-        "created_at": (
-            None if created_us is None else pd.Timestamp(created_us * 1000)
-        ),
+        "created_at": created_us,
     }
 
 
 def alert_frame(rows: list[dict]) -> pd.DataFrame:
     return pd.DataFrame(rows, columns=list(ALERT_DTYPES)).astype(ALERT_DTYPES)
+
+
+def alert_instants(folded: DataFrame) -> DataFrame:
+    """FOLD_SCHEMA rows → ALERT_SCHEMA rows: the micros become
+    timestamps in the JVM."""
+    return folded.select(
+        *[
+            F.timestamp_micros(f.name).alias(f.name)
+            if isinstance(f.dataType, T.TimestampType)
+            else F.col(f.name)
+            for f in ALERT_SCHEMA.fields
+        ]
+    )
 
 
 def aggregate_alerts(
@@ -167,7 +190,7 @@ def aggregate_alerts(
     def fold_sorted(pdfs):
         key, state, rows = None, None, []
         for pdf in pdfs:
-            ts_us = epoch_us(pdf["ts"])
+            ts_us = pdf["ts_us"].tolist()
             start = 0
             for k, run in groupby(zip(pdf["rule_name"], pdf["dedupe"])):
                 end = start + len(list(run))
@@ -188,11 +211,13 @@ def aggregate_alerts(
             rows.append(alert_row(*key, state))
         yield alert_frame(rows)
 
-    return (
-        matches.select("rule_name", "dedupe", "ts", "match_id")
+    return alert_instants(
+        matches.select(
+            "rule_name", "dedupe", F.unix_micros("ts").alias("ts_us"), "match_id"
+        )
         .repartition("rule_name", "dedupe")
-        .sortWithinPartitions("rule_name", "dedupe", "ts", "match_id")
-        .mapInPandas(fold_sorted, ALERT_SCHEMA)
+        .sortWithinPartitions("rule_name", "dedupe", "ts_us", "match_id")
+        .mapInPandas(fold_sorted, FOLD_SCHEMA)
     )
 
 

@@ -5,19 +5,14 @@ the reference schedules hourly, iceberg-maintenance.ts:62-74,128-135):
     CALL <cat>.system.rewrite_data_files(table => t, strategy => 'binpack')
     CALL <cat>.system.expire_snapshots(table => t, older_than => ...)
     CALL <cat>.system.rewrite_manifests(table => t)
-This container has no Iceberg runtime, so `run_iceberg_maintenance`
-emits/executes the CALLs only when the catalog is present, and the
-parquet-directory fallback implements the part that exists without a
-table format: bin-pack compaction of small files (M1 — the dominant
-cost driver at 100 TB: hour partitions accumulate ~10MB realtime
-files, transformer/src/main.rs:1274, which compaction rewrites into
-target-size files)."""
+The CALLs run only where an Iceberg catalog is present. On the
+parquet path, `lake.LakeTable.compact`
+and `expire_snapshots` are the executable M1-M3: bin-pack compaction of
+small files (the dominant cost driver at 100 TB: hour partitions
+accumulate ~10MB realtime files, transformer/src/main.rs:1274) and the
+orphan sweep after it."""
 
 from __future__ import annotations
-
-import glob
-import math
-import os
 
 from pyspark.sql import SparkSession
 
@@ -44,37 +39,6 @@ def maintenance_sql(table: str, catalog: str = "catalog") -> list[str]:
     ]
 
 
-def compact_parquet_dir(
-    spark: SparkSession,
-    path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-) -> tuple[int, int]:
-    """M1 fallback: BIN_PACK a parquet directory (per partition dir if
-    hive-partitioned) into ~target-size files. Returns (files_before,
-    files_after)."""
-    part_dirs = sorted(
-        {os.path.dirname(p) for p in glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)}
-    )
-    before = after = 0
-    for d in part_dirs:
-        files = glob.glob(os.path.join(d, "*.parquet"))
-        before += len(files)
-        total = sum(os.path.getsize(f) for f in files)
-        n_out = max(1, math.ceil(total / target_file_bytes))
-        if n_out >= len(files):
-            after += len(files)
-            continue
-        df = spark.read.parquet(d)
-        tmp = d + ".compact_tmp"
-        df.coalesce(n_out).write.mode("overwrite").parquet(tmp)
-        spark.read.parquet(tmp).coalesce(n_out).write.mode("overwrite").parquet(d)
-        import shutil
-
-        shutil.rmtree(tmp, ignore_errors=True)
-        after += len(glob.glob(os.path.join(d, "*.parquet")))
-    return before, after
-
-
 def collect_file_metrics(spark: SparkSession, path: str, ts_col: str = "ts"):
     """A7: per-data-file metrics — the aggregation the reference's
     IcebergMetadataWriter extracts from parquet footers before each
@@ -88,7 +52,7 @@ def collect_file_metrics(spark: SparkSession, path: str, ts_col: str = "ts"):
     nothing is listed or fetched on the driver. The output is exactly
     an Iceberg manifest's data_file rows (path, size, record_count,
     ts bounds), usable for partition pruning and small-file detection
-    (feeds compact_parquet_dir's target selection at 100 TB)."""
+    (feeds compaction target selection at 100 TB)."""
     from pyspark.sql import functions as F
 
     df = spark.read.parquet(path)

@@ -10,18 +10,26 @@ that cannot coerce to the resolved schema, and lake.LakeTable lands
 hour-partitioned output. Mirrors the reference's §3.1 lifecycle with
 one DAG per table instead of four Lambdas.
 
+`land` is the one per-batch landing body: batch calls it once per
+table, and streaming.ingest calls it from `foreachBatch`. Lines the
+JSON parser cannot read and rows that cannot coerce to the declared
+schema both go to the quarantine (S17, ref transformer/src/main.rs:
+1433-1494), so rows_in == rows_out + rows_sidelined. The row counts
+come from observations inside the table's write job, and the
+quarantine write runs only when that job saw a sidelined row.
+
 Per call, a table pays its plan build only on the first batch of a
 new input schema: the transform replays its memoized compile
 (transform.compiler), and the full-schema projection and landing casts
-are cached per schema pair. The row counts come from an observation
-on the landing write, so a table lands in one write job; the
-quarantine write runs only when that job saw a sidelined row.
+are cached per schema pair.
 """
 
 from __future__ import annotations
 
+import operator
 import os
-from functools import lru_cache
+from functools import lru_cache, reduce
+from typing import Callable
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -33,8 +41,20 @@ from matano_spark.schema.config import TableDef, load_log_source
 from matano_spark.schema.resolve import fields_to_structtype
 from matano_spark.sources import readers
 
+# the raw line of a record the JSON parser could not fully read, else null
+CORRUPT_COL = "_corrupt_record"
+
 
 def _read_raw(spark: SparkSession, td: TableDef, raw_path: str) -> DataFrame:
+    """The table's parsed input, with CORRUPT_COL (null for formats that
+    do not capture unreadable lines)."""
+    df = _parse_raw(spark, td, raw_path)
+    if CORRUPT_COL in df.columns:
+        return df
+    return df.withColumn(CORRUPT_COL, F.lit(None).cast("string"))
+
+
+def _parse_raw(spark: SparkSession, td: TableDef, raw_path: str) -> DataFrame:
     fmt = td.ingest.get("format", "json")
     if fmt == "csv":
         return readers.read_csv_with_headers(
@@ -70,8 +90,14 @@ def _read_raw(spark: SparkSession, td: TableDef, raw_path: str) -> DataFrame:
     if expand:
         return readers.expand_records(payload, "json", expand, input_schema)
     if input_schema is not None:
+        # PERMISSIVE parse, as the stream reader: an unreadable line
+        # fills CORRUPT_COL instead of landing as an all-null row
+        parse = T.StructType(
+            list(input_schema.fields) + [T.StructField(CORRUPT_COL, T.StringType())]
+        )
         return payload.select(
-            F.from_json("json", input_schema).alias("r")
+            F.from_json("json", parse, {"columnNameOfCorruptRecord": CORRUPT_COL})
+            .alias("r")
         ).select("r.*")
     return payload
 
@@ -95,18 +121,97 @@ def _full_schema_columns(
 
 
 def _landed_counts(
-    counts: Observation, good: DataFrame, bad: DataFrame
+    committed: bool,
+    lines: Observation,
+    rows: Observation,
+    good: DataFrame,
+    bad: DataFrame,
+    unread: DataFrame,
+) -> tuple[int, int, int]:
+    """(rows in, rows that cannot coerce, unreadable lines), as observed
+    by the job that landed `good`. Two cases count each side with a job
+    instead: a replayed streaming batch, which lands nothing, and a job
+    that wrote no row, where AQE replaces the observed stage with an
+    empty relation and the observations complete with empty rows."""
+    if committed and rows._jo.getRow().length() and lines._jo.getRow().length():
+        unparsed = lines.get["unparsed"]
+        return rows.get["rows"] + unparsed, rows.get["bad"], unparsed
+    n_bad, n_unread = bad.count(), unread.count()
+    return good.count() + n_bad + n_unread, n_bad, n_unread
+
+
+def land(
+    raw: DataFrame,
+    pipeline: Callable[[DataFrame], DataFrame],
+    schema: T.StructType | None,
+    table: LakeTable,
+    quarantine: str | None,
+    log_source: str,
+    epoch: tuple[str, int] | None = None,
 ) -> tuple[int, int]:
-    """(rows in, rows sidelined), as observed by the job that landed
-    `good`. When that job wrote no row, AQE replaces the observed stage
-    with an empty relation and the observation completes with an empty
-    row, which `Observation.get` cannot convert; count both sides
-    instead — an all-sidelined or empty batch, so both jobs are small."""
-    if counts._jo.getRow().length() == 0:
-        n_bad = bad.count()
-        return good.count() + n_bad, n_bad
-    m = counts.get
-    return m["rows"], m["bad"]
+    """Land one batch of parsed input `raw` (with CORRUPT_COL) in
+    `table`; returns (rows in, rows sidelined).
+
+    Unreadable lines (CORRUPT_COL set and no field parsed) are split
+    off, the rest is transformed, projected to `schema` (None: the
+    transform's output is the table schema) and cast to it; rows that
+    cannot coerce are split off as well. The landing job counts both
+    sides. Sidelined rows go to `quarantine` only when there are any:
+    a batch run appends them, and a streaming batch (`epoch` = (stream
+    id, batch id)) overwrites its own `epoch=<stream id>.<batch id>`
+    directory, so a replay writes them once — as the table, which
+    lands a replayed batch's rows once."""
+    # A syntax error leaves every field null. A record with a field of
+    # another type also fills CORRUPT_COL but keeps its other fields (a
+    # multi-table pack's record for another table): it is readable, and
+    # the mismatched field is null.
+    unreadable = reduce(
+        operator.and_,
+        [F.col(f"`{c}`").isNull() for c in raw.columns if c != CORRUPT_COL],
+        F.col(CORRUPT_COL).isNotNull(),
+    )
+    # The split filter tests a flag column above the observation, whose
+    # CollectMetrics node stops constraint propagation: a filter on the
+    # parse expression itself puts its constraints through every
+    # projection of the transform, which can stall the optimizer.
+    lines = Observation()
+    readable = (
+        raw.withColumn("__unreadable", unreadable)
+        .observe(lines, F.count_if("__unreadable").alias("unparsed"))
+        .filter(~F.col("__unreadable"))
+        .drop("__unreadable", CORRUPT_COL)
+    )
+    out = pipeline(readable)
+    if schema is None:
+        schema = out.schema
+    good, bad, rows = apply_schema(
+        out.select(*_full_schema_columns(out.schema, schema)), schema
+    )
+    unread = raw.filter(unreadable)
+    committed = table.append(good, epoch) is not None
+    n_in, n_bad, n_unread = _landed_counts(committed, lines, rows, good, bad, unread)
+    if quarantine is not None and n_bad + n_unread:
+        # a false literal filter prunes a kind with no rows together with
+        # its branch, so unreadable lines alone do not rerun the transform
+        sidelined = (
+            bad.where(F.lit(n_bad > 0))
+            .withColumn("error_kind", F.lit("schema_mismatch"))
+            .unionByName(
+                unread.where(F.lit(n_unread > 0)).select(
+                    F.col(CORRUPT_COL).alias("raw"),
+                    F.lit("parse_error").alias("error_kind"),
+                ),
+                allowMissingColumns=True,
+            )
+            .withColumn("log_source", F.lit(log_source))
+        )
+        if epoch is None:
+            sidelined.write.mode("append").parquet(quarantine)
+        else:
+            sidelined.write.mode("overwrite").parquet(
+                f"{quarantine}/epoch={epoch[0]}.{epoch[1]}"
+            )
+    return n_in, n_bad + n_unread
 
 
 def run_log_source(
@@ -130,32 +235,21 @@ def run_log_source(
             # pipelines for tables the caller knows carry no rows in
             # this batch — at scale one job per table is the norm
             continue
-        raw = _read_raw(spark, td, raw_path)
-        normalized = td.pipeline(raw)
-        projected = normalized.select(
-            *_full_schema_columns(normalized.schema, td.schema)
-        )
-        counts = Observation()
-        good, bad = apply_schema(projected, td.schema, counts)
         table = LakeTable(
             spark,
             f"{td.log_source}_{td.name}",
             os.path.join(lake_root, td.log_source, td.name),
             use_iceberg=False,
         )
-        table.append(good)
-        rows_transformed, n_bad = _landed_counts(counts, good, bad)
-        if quarantine_root is not None and n_bad:
-            bad.withColumn("log_source", F.lit(td.log_source)).write.mode(
-                "append"
-            ).parquet(os.path.join(quarantine_root, td.log_source))
-        out[td.name] = TableResult(
-            table=table,
-            rows_in=rows_transformed,
-            rows_out=rows_transformed - n_bad,
-            rows_sidelined=n_bad,
-            schema=td.schema,
+        n_in, n_bad = land(
+            _read_raw(spark, td, raw_path),
+            td.pipeline,
+            td.schema,
+            table,
+            quarantine_root and os.path.join(quarantine_root, td.log_source),
+            td.log_source,
         )
+        out[td.name] = TableResult(table, n_in, n_in - n_bad, n_bad, td.schema)
     return out
 
 

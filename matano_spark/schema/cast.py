@@ -107,30 +107,28 @@ def _schema_plan(
 
 
 def apply_schema(
-    df: DataFrame, schema: T.StructType, counts: Observation | None = None
-) -> tuple[DataFrame, DataFrame]:
-    """Cast df to the declared schema. Returns (good, bad):
+    df: DataFrame, schema: T.StructType
+) -> tuple[DataFrame, DataFrame, Observation]:
+    """Cast df to the declared schema. Returns (good, bad, counts):
     good — declared columns, coerced; bad — original rows + the
-    `mismatch_fields` array naming the leaves that failed.
+    `mismatch_fields` array naming the leaves that failed; counts — an
+    observation that the first action on `good` fills with `rows` (all
+    input rows) and `bad` (rows with a mismatch), so landing `good`
+    counts both sides in its own job.
 
-    With `counts`, the first action on `good` also observes `rows`
-    (all input rows) and `bad` (rows with a mismatch), so landing
-    `good` counts both sides in its own job. Both sides then read the
-    observed frame, whose CollectMetrics node also keeps the split
-    filters from being pushed into (and inlining) the transform's
-    projections."""
+    Both sides read the observed frame. Its CollectMetrics node also
+    keeps the split filters from being pushed into (and inlining) the
+    transform's projections, where they can exhaust the optimizer."""
     out_cols, mismatches = _schema_plan(df.schema, schema)
-    tagged = df.withColumn("__mismatch", mismatches)
-    landed = tagged
-    if counts is not None:
-        landed = tagged.observe(
-            counts,
-            F.count(F.lit(1)).alias("rows"),
-            F.count_if(F.size("__mismatch") > 0).alias("bad"),
-        )
+    counts = Observation()
+    landed = df.withColumn("__mismatch", mismatches).observe(
+        counts,
+        F.count(F.lit(1)).alias("rows"),
+        F.count_if(F.size("__mismatch") > 0).alias("bad"),
+    )
     good = landed.filter(F.size("__mismatch") == 0).select(*out_cols)
     bad = (
         landed.filter(F.size("__mismatch") > 0)
         .withColumnRenamed("__mismatch", "mismatch_fields")
     )
-    return good, bad
+    return good, bad, counts

@@ -13,6 +13,14 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory() -> str:
+    """Half of the host's physical memory. A larger heap lets a runaway
+    plan take the whole host down with the JVM; at half, it fails alone
+    with OutOfMemoryError. SPARK_DRIVER_MEMORY overrides it."""
+    half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // (2 << 20)
+    return f"{half_mb}m"
+
+
 def get_spark(app_name: str = "matano_spark", cpus: int | None = None) -> SparkSession:
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -25,7 +33,10 @@ def get_spark(app_name: str = "matano_spark", cpus: int | None = None) -> SparkS
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # let the planner pick shuffled-hash over sort-merge when its

@@ -4,7 +4,7 @@ run continuously with keyed state (SURVEY.md W2/W3 Spark mapping:
 PySpark's applyInPandasWithState).
 
 State per (rule_name, dedupe) is the key's open alert (STATE_SCHEMA).
-Each micro-batch sorts the key's matches by (ts, match_id) and folds
+Each micro-batch sorts the key's matches by (event time µs, match_id) and folds
 them with `operators.alerts.fold_alerts`, starting from the state —
 the same recurrence the batch operator runs — then emits upsert rows
 for every alert it touched; downstream a `foreachBatch` MERGE keeps
@@ -26,12 +26,14 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from pyspark.sql import functions as F
+
 from matano_spark.operators.alerts import (
-    ALERT_SCHEMA,
+    FOLD_SCHEMA,
     STATE_SCHEMA,
     alert_frame,
+    alert_instants,
     alert_row,
-    epoch_us,
     fold_alerts,
     rule_settings,
 )
@@ -56,10 +58,10 @@ def make_fold(
         thr, win_s = settings(rule_name)
         prior = tuple(state.get) if state.exists else None
         pdf = pd.concat(list(pdfs)).sort_values(
-            ["ts", "match_id"], kind="mergesort"
+            ["ts_us", "match_id"], kind="mergesort"
         )
         closed, open_alert = fold_alerts(
-            prior, epoch_us(pdf["ts"]), thr, win_s * 1_000_000
+            prior, pdf["ts_us"].tolist(), thr, win_s * 1_000_000
         )
         state.update(open_alert)
         # event-time eviction: the key is dead once the WATERMARK
@@ -86,12 +88,16 @@ def streaming_alerts(
     within `watermark_delay` still fold into their alert; older ones
     are dropped by the watermark (ref matano_alerts.rs:172-196 window
     semantics)."""
-    return (
+    return alert_instants(
         matches.withWatermark("ts", watermark_delay)
+        .select(
+            "rule_name", "dedupe", "ts",
+            F.unix_micros("ts").alias("ts_us"), "match_id",
+        )
         .groupBy("rule_name", "dedupe")
         .applyInPandasWithState(
             make_fold(threshold, window_seconds, rule_config),
-            outputStructType=ALERT_SCHEMA,
+            outputStructType=FOLD_SCHEMA,
             stateStructType=STATE_SCHEMA,
             outputMode="update",
             timeoutConf=GroupStateTimeout.EventTimeTimeout,

@@ -3,33 +3,34 @@ lake table + quarantine channel.
 
 Reference pipeline (SURVEY.md §3.1): S3 event → route → decompress →
 frame lines → VRL transform → Avro → Parquet → Iceberg commit, across
-4 Lambdas. Here: one `readStream` file source → transform pipeline →
-`foreachBatch` writing partitioned parquet — checkpointed, exactly-once
-per input file (S16; the file-source log replaces the DynamoDB
-sequencer markers).
+4 Lambdas. Here: one `readStream` file source whose `foreachBatch`
+calls `pipeline.land`, the landing body batch ingestion uses too. The
+file-source log makes each input file exactly-once per checkpoint (S16;
+it replaces the DynamoDB sequencer markers), and each micro-batch is
+one snapshot of the `LakeTable` committed with the batch's epoch, so a
+batch Spark replays after its write lands its rows once.
 
 Error sidelining (S17, ref transformer/src/main.rs:1433-1494): the
-JSON reader runs PERMISSIVE with a corrupt-record column; rows that
-fail parsing are appended to a quarantine directory keyed by
-(log_source, error_kind) so rows_in == rows_out + sidelined always
-holds. Iceberg note: where the iceberg runtime jar is on the
-classpath, `_write_batch` swaps the parquet append for
-`df.writeTo(table).append()` — the pipeline code is unchanged
-(tables.py abstraction); this container has no iceberg jar, so the
-parquet path is the tested one.
+JSON reader runs PERMISSIVE with a corrupt-record column; `land`
+quarantines the lines it marks, so rows_in == rows_out + sidelined
+always holds.
+
+The lake's contents are what `LakeTable.read` returns. The table here
+is append-only, so a plain parquet read of its directory returns the
+same rows.
 """
 
 from __future__ import annotations
 
+import json
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from matano_spark.lake import write_hours
-
-CORRUPT_COL = "_corrupt_record"
+from matano_spark import hadoop_fs
+from matano_spark.lake import LakeTable
+from matano_spark.pipeline import CORRUPT_COL, land
 
 
 def read_json_stream(
@@ -71,32 +72,18 @@ def run_ingest(
 ):
     """Start (availableNow) the ingest job; returns the query handle.
 
-    Each micro-batch:
-      1. split corrupt rows → quarantine (grouped by error kind)
-      2. transform good rows with the compiled pipeline
-      3. append to the lake partitioned by the UTC ts_hour (W1 hidden
-         partition analog, ref IcebergMetadataWriter.kt:60-65)
-    """
+    Each micro-batch lands through `pipeline.land` into the LakeTable at
+    `out_dir`, with the transform's output as the table schema and the
+    epoch (stream id, batch id). The stream id is the query id the
+    checkpoint records, so a fresh checkpoint starts new epochs instead
+    of colliding with the old stream's."""
+    table = LakeTable(spark, log_source, out_dir, ts_col=ts_col, use_iceberg=False)
     stream = read_json_stream(spark, source_dir, schema)
 
-    def write_batch(batch: DataFrame, epoch_id: int) -> None:
-        batch = batch.persist()
-        try:
-            bad = batch.filter(F.col(CORRUPT_COL).isNotNull())
-            good = batch.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
-            n_bad = bad.count()
-            if n_bad:
-                (
-                    bad.select(
-                        F.lit(log_source).alias("log_source"),
-                        F.lit("parse_error").alias("error_kind"),
-                        F.col(CORRUPT_COL).alias("raw"),
-                        F.lit(epoch_id).alias("epoch_id"),
-                    ).write.mode("append").parquet(quarantine_dir)
-                )
-            write_hours(pipeline(good), out_dir, ts_col=ts_col)
-        finally:
-            batch.unpersist()
+    def write_batch(batch: DataFrame, batch_id: int) -> None:
+        meta = hadoop_fs.read_text(spark, f"{checkpoint_dir}/metadata")
+        epoch = (json.loads(meta)["id"], batch_id)
+        land(batch, pipeline, None, table, quarantine_dir, log_source, epoch)
 
     return (
         stream.writeStream.foreachBatch(write_batch)
@@ -118,62 +105,3 @@ def ingest_counts(spark: SparkSession, out_dir: str, quarantine_dir: str):
             return 0
 
     return _count(out_dir), _count(quarantine_dir)
-
-
-def run_ingest_snapshots(
-    spark: SparkSession,
-    source_dir: str,
-    schema: T.StructType,
-    pipeline: Callable[[DataFrame], DataFrame],
-    table_path: str,
-    checkpoint_dir: str,
-    quarantine_dir: str,
-    table_name: str = "default",
-    ts_col: str = "ts",
-):
-    """run_ingest with a SNAPSHOT-LOG sink: each micro-batch commits
-    one snapshot whose DATA DIRECTORY is named by the epoch id, so a
-    checkpoint replay OVERWRITES the same directory and keeps the
-    original manifest — idempotent end to end (the parquet-append sink
-    can duplicate rows on replay-after-write-before-commit; this one
-    cannot). Manifest ids come from the table's monotonic snapshot
-    counter (shared with compact/overwrite/merge), so maintenance ops
-    interleave safely between micro-batches. Every batch is also
-    time-travelable: the manifest whose `epoch` field matches is the
-    lake exactly as of that micro-batch — the Iceberg-commit-per-batch
-    behavior (IcebergMetadataWriter.kt) on the fallback."""
-    from matano_spark.lake_snapshots import SnapshotLakeTable
-
-    table = SnapshotLakeTable(spark, table_name, table_path, ts_col=ts_col)
-    stream = read_json_stream(spark, source_dir, schema)
-
-    def write_batch(batch: DataFrame, epoch_id: int) -> None:
-        batch = batch.persist()
-        try:
-            bad = batch.filter(F.col(CORRUPT_COL).isNotNull())
-            good = batch.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
-            if bad.count():
-                (
-                    bad.select(
-                        F.lit(table_name).alias("log_source"),
-                        F.lit("parse_error").alias("error_kind"),
-                        F.col(CORRUPT_COL).alias("raw"),
-                        F.lit(epoch_id).alias("epoch_id"),
-                    ).write.mode("overwrite").parquet(
-                        f"{quarantine_dir}/epoch={epoch_id}"
-                    )
-                )
-            # idempotent replay: commit_epoch re-lands the epoch-named
-            # dir and reuses the original manifest; maintenance
-            # snapshots (compact etc.) interleave safely because the
-            # manifest counter is shared, not the epoch id.
-            table.commit_epoch(pipeline(good), epoch_id)
-        finally:
-            batch.unpersist()
-
-    return (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )

@@ -1944,21 +1944,23 @@ def otx_append_indicator_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def m1_compaction_conservation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M1 bin-pack compaction inside the oracle gate: land a lineitem
-    slice as 24 small files, compact_parquet_dir rewrites them to
-    ~target-size files, and the post-compaction table must (a) have
-    fewer files and (b) conserve every row and value exactly — the
-    invariant the reference's hourly rewrite_data_files procedure
-    relies on (iceberg-maintenance.ts:62-74).
+    slice as a LakeTable of 24 small files, `LakeTable.compact` rewrites
+    them into one snapshot of fewer files, and the post-compaction table
+    must (a) have fewer files and (b) conserve every row and value
+    exactly — the invariant the reference's hourly rewrite_data_files
+    procedure relies on (iceberg-maintenance.ts:62-74).
     """
-    from matano_spark.operators.maintenance import compact_parquet_dir
+    from matano_spark.lake import LakeTable
     from matano_spark.workloads.util import dsum
 
     li = t(spark, sf_dir, "lineitem").filter(F.col("l_partkey") <= 400)
-    d = _oracle_scratch("m1_oracle_")
-    li.repartition(24).write.mode("overwrite").parquet(d)
-    before, after = compact_parquet_dir(spark, d, target_file_bytes=1 << 30)
+    table = LakeTable(spark, "m1_lineitem", _oracle_scratch("m1_oracle_"), use_iceberg=False)
+    table.append(li.repartition(24))
+    before = len(table.snapshot()["files"])
+    table.compact()
+    after = len(table.snapshot()["files"])
     return (
-        spark.read.parquet(d)
+        table.read()
         .groupBy("l_returnflag")
         .agg(
             F.count(F.lit(1)).alias("n_rows"),

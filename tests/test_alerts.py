@@ -166,3 +166,43 @@ def test_aggregate_alerts_per_rule_matches_reference(spark):
     # activates every alert, rule2 (threshold 5) leaves some pending
     assert all(r[6] for r in got if r[0] == "rule1")
     assert not all(r[6] for r in got if r[0] == "rule2")
+
+
+def test_alert_ids_and_instants_do_not_depend_on_session_zone(spark):
+    """The fold sees event time as UTC epoch micros: the same matches
+    give the same alert ids and instants under a UTC session and under
+    America/New_York, equal to the reference (which hashes UTC micros)."""
+    base = 1714564800000000  # 2024-05-01T12:00:00Z
+    minutes = [0, 5, 30, 70, 75]
+    df = spark.createDataFrame(
+        [("r", "k", base + m * 60_000_000, f"m{i}") for i, m in enumerate(minutes)],
+        "rule_name string, dedupe string, ts_us long, match_id string",
+    ).select("rule_name", "dedupe", F.timestamp_micros("ts_us").alias("ts"), "match_id")
+    micros = [F.unix_micros(c).alias(c) for c in ("first_matched_at", "last_matched_at", "created_at")]
+
+    def alerts_under(zone):
+        key = "spark.sql.session.timeZone"
+        before = spark.conf.get(key)
+        spark.conf.set(key, zone)
+        try:
+            return sorted(
+                tuple(r)
+                for r in aggregate_alerts(df, 2, 3600)
+                .select("rule_name", "dedupe", "alert_id", *micros, "match_count", "activated")
+                .collect()
+            )
+        finally:
+            spark.conf.set(key, before)
+
+    epoch = dt.datetime(1970, 1, 1)
+    expect = sorted(
+        (rule, dedupe, alert_id, *[None if t is None else (t - epoch) // dt.timedelta(microseconds=1)
+                                   for t in (first, last, created)], n, act)
+        for rule, dedupe, alert_id, first, last, n, act, created in reference_alert_rows(
+            [("r", "k", epoch + dt.timedelta(microseconds=base + m * 60_000_000)) for m in minutes],
+            {"r": (2, 3600)},
+        )
+    )
+    assert len(expect) == 2
+    assert alerts_under("UTC") == expect
+    assert alerts_under("America/New_York") == expect

@@ -172,3 +172,34 @@ def test_read_hours_with_schema_starts_no_job(spark, tmpdir):
         sc.setLocalProperty("spark.job.description", None)
     assert jobs == []
     assert sorted(r.id for r in pruned.collect()) == ["a", "b"]
+
+
+def test_read_after_many_commits_starts_no_job(spark, tmpdir):
+    """Past 32 explicit paths Spark lists them with a parallel job; the
+    manifest read keeps one root and filters files by name, so no job
+    starts before the action however many files are live."""
+    t = LakeTable(spark, "ev", str(tmpdir / "ev"), use_iceberg=False)
+    for i in range(12):
+        t.append(_df(spark, [(f"e{i}{h}", h, i) for h in range(3)]))
+    assert len(t.snapshot()["files"]) == 36
+    sc = spark.sparkContext
+    group = "lake-read-many-files-probe"
+    sc.setJobGroup(group, "probe")
+    try:
+        df = t.read()
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert jobs == []
+    assert df.count() == 36
+
+
+def test_read_skips_files_no_manifest_lists(spark, tmpdir):
+    """A file under the root that no manifest lists (a lost commit, or
+    anything else) is never opened: the name filter drops it while
+    planning."""
+    t = LakeTable(spark, "ev", str(tmpdir / "ev"), use_iceberg=False)
+    t.append(_df(spark, [("a", 0, 1), ("b", 1, 2)]))
+    (tmpdir / "ev" / "ts_hour=2024-05-01-10" / "junk.parquet").write_text("not parquet")
+    assert sorted(r.id for r in t.read().collect()) == ["a", "b"]

@@ -1,14 +1,18 @@
-"""Snapshot log on the parquet fallback: time travel, compaction,
-expiry — the Iceberg contract without a catalog."""
+"""LakeTable's snapshot manifests on the parquet path: time travel,
+compaction, expiry, epoch commits and CAS concurrency — the Iceberg
+contract without a catalog."""
 
 from __future__ import annotations
 
 import datetime as dt
 
 import pytest
-from pyspark.sql import functions as F
 
-from matano_spark.lake_snapshots import SnapshotLakeTable
+from matano_spark.lake import LakeTable
+
+
+def _table(spark, path, ts_col="ts"):
+    return LakeTable(spark, "snap_t", str(path), ts_col=ts_col, use_iceberg=False)
 
 
 def _rows(spark, ids, hour):
@@ -19,7 +23,7 @@ def _rows(spark, ids, hour):
 
 
 def test_append_time_travel_and_read(spark, tmp_path):
-    t = SnapshotLakeTable(spark, "snap_t", str(tmp_path / "t"))
+    t = _table(spark, tmp_path / "t")
     s0 = t.append(_rows(spark, [1, 2], 10))
     s1 = t.append(_rows(spark, [3], 11))
     assert (s0, s1) == (0, 1)
@@ -30,8 +34,9 @@ def test_append_time_travel_and_read(spark, tmp_path):
 
 
 def test_overwrite_keeps_history_until_expiry(spark, tmp_path):
-    t = SnapshotLakeTable(spark, "snap_t", str(tmp_path / "t"))
+    t = _table(spark, tmp_path / "t")
     t.append(_rows(spark, [1, 2], 10))
+    old_files = t.snapshot()["files"]
     t.overwrite(_rows(spark, [9], 12))
     assert {r["id"] for r in t.read().collect()} == {9}
     # history still readable
@@ -39,7 +44,7 @@ def test_overwrite_keeps_history_until_expiry(spark, tmp_path):
 
     res = t.expire_snapshots(keep_last=1)
     assert res["expired_snapshots"] == [0]
-    assert len(res["removed_dirs"]) == 1  # orphaned by the overwrite
+    assert res["removed_files"] == old_files  # orphaned by the overwrite
     # current read unaffected; time travel to 0 now refuses
     assert {r["id"] for r in t.read().collect()} == {9}
     with pytest.raises(KeyError):
@@ -47,23 +52,27 @@ def test_overwrite_keeps_history_until_expiry(spark, tmp_path):
 
 
 def test_compact_rewrites_to_one_dir_same_rows(spark, tmp_path):
-    t = SnapshotLakeTable(spark, "snap_t", str(tmp_path / "t"))
+    """Three appends to one hour leave three files; compaction rewrites
+    them into one file of the same rows."""
+    t = _table(spark, tmp_path / "t")
     for batch in ([1], [2], [3]):
         t.append(_rows(spark, batch, 10))
+    appended = t.snapshot()["files"]
+    assert len(appended) == 3
     before = {r["id"] for r in t.read().collect()}
     sid = t.compact()
-    snaps = {m["id"]: m for m in t.snapshots()}
-    assert snaps[sid]["op"] == "compact"
-    assert len(snaps[sid]["dirs"]) == 1
+    m = t.snapshot(sid)
+    assert m["op"] == "compact"
+    assert len(m["files"]) == 1
     assert {r["id"] for r in t.read().collect()} == before == {1, 2, 3}
-    # expiry after compaction frees the three small append dirs
+    # expiry after compaction frees the three small append files
     res = t.expire_snapshots(keep_last=1)
-    assert len(res["removed_dirs"]) == 3  # the three small append dirs
+    assert res["removed_files"] == appended
     assert {r["id"] for r in t.read().collect()} == before
 
 
 def test_merge_by_key_upserts_with_history(spark, tmp_path):
-    t = SnapshotLakeTable(spark, "snap_t", str(tmp_path / "t"))
+    t = _table(spark, tmp_path / "t")
     base = spark.createDataFrame(
         [(1, "a", dt.datetime(2024, 5, 1, 10)), (2, "b", dt.datetime(2024, 5, 1, 10))],
         "id long, v string, ts timestamp",
@@ -82,13 +91,13 @@ def test_merge_by_key_upserts_with_history(spark, tmp_path):
 
 
 def test_snapshot_ingest_epoch_commits_and_replay(spark, tmp_path):
-    """One snapshot per micro-batch; a checkpoint replay of an epoch
-    rewrites the same directory + manifest instead of duplicating."""
+    """run_ingest commits one snapshot per micro-batch; each batch is
+    readable as of its own snapshot."""
     import json as _json
 
     from pyspark.sql import types as T
 
-    from matano_spark.streaming.ingest import run_ingest_snapshots
+    from matano_spark.streaming.ingest import run_ingest
 
     src = tmp_path / "src"
     src.mkdir()
@@ -103,56 +112,57 @@ def test_snapshot_ingest_epoch_commits_and_replay(spark, tmp_path):
                     _json.dumps({"id": i, "ts": "2024-05-01T10:00:00Z"}) + "\n"
                 )
 
-    deliver("b0.jsonl", [1, 2])
-    q = run_ingest_snapshots(
-        spark, str(src), schema, lambda df: df,
-        str(tmp_path / "lake"), str(tmp_path / "ckpt"), str(tmp_path / "q"),
-    )
-    q.awaitTermination(120)
-    deliver("b1.jsonl", [3])
-    q = run_ingest_snapshots(
-        spark, str(src), schema, lambda df: df,
-        str(tmp_path / "lake"), str(tmp_path / "ckpt"), str(tmp_path / "q"),
-    )
-    q.awaitTermination(120)
+    def ingest():
+        run_ingest(
+            spark, str(src), schema, lambda df: df,
+            str(tmp_path / "lake"), str(tmp_path / "ckpt"), str(tmp_path / "q"),
+        ).awaitTermination(120)
 
-    t = SnapshotLakeTable(spark, "default", str(tmp_path / "lake"))
-    assert [m["id"] for m in t.snapshots()] == [0, 1]
+    deliver("b0.jsonl", [1, 2])
+    ingest()
+    deliver("b1.jsonl", [3])
+    ingest()
+
+    t = _table(spark, tmp_path / "lake")
+    assert t.snapshot_ids() == [0, 1]
     assert {r["id"] for r in t.read().collect()} == {1, 2, 3}
     assert {r["id"] for r in t.read(at_snapshot=0).collect()} == {1, 2}
+    assert list(t.snapshot()["epochs"].values()) == [1]
 
 
 def test_compact_between_epochs_survives_next_commit(spark, tmp_path):
-    """r4 ADVICE regression: a compact() between micro-batches used to
-    allocate the id the next epoch would reuse, so the next epoch's
-    commit silently dropped the compacted data. Epoch dirs + the
-    shared monotonic manifest counter keep both."""
-    t = SnapshotLakeTable(spark, "snap_t", str(tmp_path / "t"))
-    t.commit_epoch(_rows(spark, [1, 2], 10), epoch_id=0)
-    t.commit_epoch(_rows(spark, [3], 10), epoch_id=1)
+    """A compact() between micro-batches shares the snapshot id space
+    with epoch commits: the next epoch keeps the compacted rows, and a
+    replayed epoch still lands nothing."""
+    t = _table(spark, tmp_path / "t")
+    t.append(_rows(spark, [1, 2], 10), epoch=("s", 0))
+    t.append(_rows(spark, [3], 10), epoch=("s", 1))
+    epoch_files = t.snapshot()["files"]
     cid = t.compact()
-    t.commit_epoch(_rows(spark, [4], 11), epoch_id=2)
+    t.append(_rows(spark, [4], 11), epoch=("s", 2))
     # all rows — including the compacted ones — are in the latest view
     assert {r["id"] for r in t.read().collect()} == {1, 2, 3, 4}
-    snaps = t.snapshots()
-    assert [m["id"] for m in snaps] == [0, 1, 2, 3]
-    assert snaps[2]["op"] == "compact" and snaps[2]["id"] == cid
-    # epoch replay is still idempotent: re-commit of epoch 2 adds no
+    assert t.snapshot_ids() == [0, 1, 2, 3]
+    assert t.snapshot(2)["op"] == "compact" and cid == 2
+    # epoch replay is idempotent: re-commit of epoch 2 adds no
     # manifest and no rows
-    t.commit_epoch(_rows(spark, [4], 11), epoch_id=2)
-    assert [m["id"] for m in t.snapshots()] == [0, 1, 2, 3]
+    assert t.append(_rows(spark, [4], 11), epoch=("s", 2)) is None
+    assert t.snapshot_ids() == [0, 1, 2, 3]
     assert sorted(r["id"] for r in t.read().collect()) == [1, 2, 3, 4]
-    # expiry sweeps orphaned EPOCH dirs too once compaction supersedes
+    # another stream's epoch 2 is its own batch
+    t.append(_rows(spark, [5], 11), epoch=("other", 2))
+    assert sorted(r["id"] for r in t.read().collect()) == [1, 2, 3, 4, 5]
+    # expiry sweeps the epoch files once compaction supersedes them
     t.compact()
     res = t.expire_snapshots(keep_last=1)
-    assert "e0" in res["removed_dirs"] and "e1" in res["removed_dirs"]
-    assert sorted(r["id"] for r in t.read().collect()) == [1, 2, 3, 4]
+    assert set(epoch_files) <= set(res["removed_files"])
+    assert sorted(r["id"] for r in t.read().collect()) == [1, 2, 3, 4, 5]
 
 
 def test_merge_by_key_deterministic_on_duplicate_incoming(spark, tmp_path):
-    """ADVICE regression: duplicate keys WITHIN one incoming batch must
-    resolve to the same keeper on every run (stable-hash tiebreaker)."""
-    t = SnapshotLakeTable(spark, "snap_t", str(tmp_path / "t"), ts_col="nope")
+    """Duplicate keys WITHIN one incoming batch resolve to the same
+    keeper on every run (stable-hash tiebreaker)."""
+    t = _table(spark, tmp_path / "t", ts_col="nope")
     base = spark.createDataFrame([(1, "x")], "id long, v string")
     t.overwrite(base)
     dup = spark.createDataFrame(
@@ -160,7 +170,7 @@ def test_merge_by_key_deterministic_on_duplicate_incoming(spark, tmp_path):
     )
     picks = set()
     for _ in range(3):
-        t2 = SnapshotLakeTable(spark, "snap_t", str(tmp_path / "t"), ts_col="nope")
+        t2 = _table(spark, tmp_path / "t", ts_col="nope")
         t2.merge_by_key(dup.repartition(7), ["id"])
         picks.add(tuple(sorted((r["id"], r["v"]) for r in t2.read().collect())))
     assert len(picks) == 1
@@ -169,9 +179,10 @@ def test_merge_by_key_deterministic_on_duplicate_incoming(spark, tmp_path):
 
 def test_cas_commit_refuses_taken_id(spark, tmp_path):
     """The CAS primitive: a manifest id can be published exactly once."""
-    t = SnapshotLakeTable(spark, "snap_t", str(tmp_path / "t"))
+    t = _table(spark, tmp_path / "t")
     t.append(_rows(spark, [1], 10))
-    stale = {"id": 0, "parent": None, "dirs": ["dffffffffff"], "op": "append"}
+    stale = {"id": 0, "parent": None, "op": "append", "files": ["x.parquet"],
+             "schema": t.snapshot()["schema"], "epochs": {}}
     assert t._try_commit(stale) is False
     # and the real manifest is untouched
     assert {r["id"] for r in t.read().collect()} == {1}
@@ -179,16 +190,15 @@ def test_cas_commit_refuses_taken_id(spark, tmp_path):
 
 def test_concurrent_appenders_no_lost_update(spark, tmp_path):
     """Two writers interleaving appends on the same table: every row
-    lands, the snapshot chain is linear, and no commit is overwritten
-    (verdict r4 task: multi-writer safety net without a catalog)."""
+    lands, the snapshot chain is linear, and no commit is overwritten."""
     import threading
 
-    path = str(tmp_path / "t")
+    path = tmp_path / "t"
     errs: list[Exception] = []
 
     def writer(offset):
         try:
-            w = SnapshotLakeTable(spark, "snap_t", path)
+            w = _table(spark, path)
             for i in range(4):
                 w.append(_rows(spark, [offset + i], 10))
         except Exception as e:  # surface in the main thread
@@ -198,11 +208,10 @@ def test_concurrent_appenders_no_lost_update(spark, tmp_path):
     t2 = threading.Thread(target=writer, args=(200,))
     t1.start(); t2.start(); t1.join(); t2.join()
     assert not errs
-    t = SnapshotLakeTable(spark, "snap_t", path)
-    snaps = t.snapshots()
+    t = _table(spark, path)
     # linear chain: ids 0..7, each parent = predecessor
-    assert [m["id"] for m in snaps] == list(range(8))
-    assert [m["parent"] for m in snaps] == [None] + list(range(7))
+    assert t.snapshot_ids() == list(range(8))
+    assert [t.snapshot(i)["parent"] for i in range(8)] == [None] + list(range(7))
     # union of both writers' rows — nothing lost
     got = sorted(r["id"] for r in t.read().collect())
     assert got == [100, 101, 102, 103, 200, 201, 202, 203]
@@ -212,11 +221,11 @@ def test_merge_lost_update_protection(spark, tmp_path):
     """A merge computed against a stale basis must not publish: simulate
     by committing an append between the merge's basis read and its CAS
     (the retry recomputes and keeps the interleaved row)."""
-    path = str(tmp_path / "t")
-    t = SnapshotLakeTable(spark, "snap_t", path, ts_col="nope")
+    path = tmp_path / "t"
+    t = _table(spark, path, ts_col="nope")
     t.overwrite(spark.createDataFrame([(1, "x")], "id long, v string"))
 
-    racer = SnapshotLakeTable(spark, "snap_t", path, ts_col="nope")
+    racer = _table(spark, path, ts_col="nope")
     orig_try = t._try_commit
     fired = {}
 

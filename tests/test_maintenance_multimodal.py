@@ -11,8 +11,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from matano_spark.detections.cache import LocalRemoteCache
+from matano_spark.lake import LakeTable
 from matano_spark.operators.maintenance import (
-    compact_parquet_dir,
     maintenance_sql,
     register_flattened_view,
 )
@@ -29,15 +29,18 @@ def tmpdir():
     shutil.rmtree(d, ignore_errors=True)
 
 
-def test_compact_parquet_dir_binpack(spark, tmpdir):
-    path = str(tmpdir / "t")
-    df = spark.range(0, 10000).withColumn("v", F.rand(seed=1))
-    df.repartition(16).write.mode("overwrite").parquet(path)
-    n_files = len(glob.glob(path + "/*.parquet"))
-    assert n_files >= 16
-    before, after = compact_parquet_dir(spark, path, target_file_bytes=1 << 30)
-    assert before >= 16 and after == 1
-    assert spark.read.parquet(path).count() == 10000  # no data loss
+def test_lake_compact_binpacks_small_files(spark, tmpdir):
+    t = LakeTable(spark, "t", str(tmpdir / "t"), use_iceberg=False)
+    t.append(spark.range(0, 10000).withColumn("v", F.rand(seed=1)).repartition(16))
+    before = t.snapshot()["files"]
+    assert len(before) >= 16
+    assert len(glob.glob(str(tmpdir / "t" / "*.parquet"))) == len(before)
+    t.compact()
+    assert len(t.snapshot()["files"]) == 1
+    assert t.read().count() == 10000  # no data loss
+    removed = t.expire_snapshots()["removed_files"]
+    assert removed == before
+    assert len(glob.glob(str(tmpdir / "t" / "*.parquet"))) == 1
 
 
 def test_maintenance_sql_shape():

@@ -116,3 +116,73 @@ def test_landed_schema_is_full_resolved_schema(spark, tmpdir):
     landed = tables["default"].read()
     declared = [f.name for f in td.schema.fields]
     assert [c for c in landed.columns if c != "ts_hour"] == declared
+
+
+OKTA_EVENTS = [
+    {
+        "published": f"2024-05-01T10:0{i}:00.000Z",
+        "eventType": "user.session.start",
+        "uuid": f"u{i}",
+        "severity": "INFO",
+        "actor": {"id": f"a{i}", "type": "User", "alternateId": f"user{i}@example.com"},
+        "client": {"ipAddress": f"10.0.0.{i}"},
+        "outcome": {"result": "SUCCESS" if i % 2 else "FAILURE"},
+    }
+    for i in range(3)
+]
+
+
+def _okta_object(directory: Path) -> None:
+    """Three okta events and one line cut off mid-record."""
+    directory.mkdir()
+    lines = [json.dumps(e) for e in OKTA_EVENTS]
+    lines.insert(1, json.dumps(OKTA_EVENTS[0])[:40])
+    (directory / "okta.json").write_text("\n".join(lines) + "\n")
+
+
+def test_truncated_line_is_quarantined_not_landed(spark, tmpdir):
+    """A line the JSON parser cannot read is sidelined, as in the
+    stream, instead of landing as an all-null row with a null ts."""
+    _okta_object(tmpdir / "raw")
+    res = run_log_source(
+        spark, str(ROOT / "okta"), str(tmpdir / "raw"), str(tmpdir / "lake"),
+        quarantine_root=str(tmpdir / "q"),
+    )["system"]
+    assert (res.rows_in, res.rows_out, res.rows_sidelined) == (4, 3, 1)
+    lake = res.read()
+    assert lake.count() == 3
+    assert lake.filter("ts IS NULL").count() == 0
+    q = spark.read.parquet(str(tmpdir / "q" / "okta")).collect()
+    assert [(r.error_kind, r.log_source) for r in q] == [("parse_error", "okta")]
+    assert q[0].raw == json.dumps(OKTA_EVENTS[0])[:40]
+
+
+def test_batch_and_stream_land_the_same_rows(spark, tmpdir):
+    """run_log_source and run_ingest, given the same objects, land the
+    same rows and sideline the same lines."""
+    from matano_spark.schema.config import load_log_source
+    from matano_spark.schema.resolve import fields_to_structtype
+    from matano_spark.streaming.ingest import ingest_counts, run_ingest
+
+    _okta_object(tmpdir / "raw")
+    batch = run_log_source(
+        spark, str(ROOT / "okta"), str(tmpdir / "raw"), str(tmpdir / "lake"),
+        quarantine_root=str(tmpdir / "q"),
+    )["system"]
+    td = load_log_source(str(ROOT / "okta"))[0]
+    run_ingest(
+        spark, str(tmpdir / "raw"), fields_to_structtype(td.ingest["input_fields"]),
+        td.pipeline, str(tmpdir / "stream"), str(tmpdir / "ckpt"),
+        str(tmpdir / "stream_q"), log_source="okta",
+    ).awaitTermination(120)
+
+    cols = ["ts", "ts_hour", "event.id", "event.action", "event.outcome", "source.ip"]
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.select(*cols).collect())
+
+    stream_lake = spark.read.parquet(str(tmpdir / "stream"))
+    assert rows(stream_lake) == rows(batch.read())
+    assert len(rows(stream_lake)) == 3
+    assert ingest_counts(spark, str(tmpdir / "stream"), str(tmpdir / "stream_q"))[1] \
+        == batch.rows_sidelined == 1

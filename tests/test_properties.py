@@ -90,7 +90,7 @@ def test_apply_schema_routes_mismatches(spark):
         ],
         "n string, meta struct<port:string, host:string>",
     )
-    good, bad = apply_schema(df, schema)
+    good, bad, _ = apply_schema(df, schema)
     assert good.schema["n"].dataType == T.LongType()
     good_rows = {r.asDict(recursive=True)["meta"]["host"] for r in good.collect()}
     assert good_rows == {"a", "d"}
@@ -118,11 +118,29 @@ def test_apply_schema_flags_scalar_where_struct_declared(spark):
         ],
         "id long, geo string, tags string",
     )
-    good, bad = apply_schema(df, schema)
+    good, bad, _ = apply_schema(df, schema)
     assert [r.id for r in good.collect()] == [2]
     b = bad.collect()
     assert len(b) == 1
     assert sorted(b[0].mismatch_fields) == ["geo", "tags"]
+
+
+def test_apply_schema_split_filters_stay_above_the_transform(spark):
+    """Pushed into the transform's projections, the good/bad filters
+    inline the mismatch expression into every chunk; on a large pack
+    that exhausted the driver heap in the optimizer. Both sides keep
+    their filter above the observed frame."""
+    from pyspark.sql import functions as F
+
+    df = spark.createDataFrame([("1",), ("x",)], "n string").select(
+        F.upper("n").alias("n")
+    )
+    schema = T.StructType([T.StructField("n", T.LongType())])
+    good, bad, _ = apply_schema(df, schema)
+    for side in (good, bad):
+        plan = side._jdf.queryExecution().optimizedPlan().toString()
+        assert "CollectMetrics" in plan
+        assert plan.index("Filter") < plan.index("CollectMetrics")
 
 
 # --- as-of join vs pandas merge_asof (independent reference) ---------

@@ -512,17 +512,45 @@ def test_streaming_fold_at_epoch_zero_keeps_created_at():
         valueSchema=STATE_SCHEMA,
     )
     pdf = pd.DataFrame(
-        {
-            "rule_name": ["r"],
-            "dedupe": ["k"],
-            "ts": pd.to_datetime(["1970-01-01T00:00:00"]),
-            "match_id": ["m0"],
-        }
+        {"rule_name": ["r"], "dedupe": ["k"], "ts_us": [0], "match_id": ["m0"]}
     )
     (out,) = make_fold(1, 3600)(("r", "k"), iter([pdf]), state)
     assert len(out) == 1
     a = out.iloc[0]
     assert a["activated"]
-    assert a["first_matched_at"] == pd.Timestamp(0)
-    assert a["created_at"] == pd.Timestamp(0)
+    assert a["first_matched_at"] == 0
+    assert a["created_at"] == 0
     assert state.get == (0, 1, True, 0, 0)
+
+
+def test_epoch_replayed_after_its_write_lands_once(spark, tmpdir):
+    """Spark replays a micro-batch whose commit it did not record. The
+    replay finds its epoch in the table's manifest and lands no rows a
+    second time; its quarantine rows are written once."""
+    import os
+
+    from matano_spark.lake import LakeTable
+
+    src = tmpdir / "src"
+    src.mkdir()
+    with open(src / "a.json", "w") as f:
+        f.write(json.dumps({"event_time": "2024-05-01T10:15:00Z", "action": "GetObject",
+                            "src_ip": "10.0.0.1"}) + "\n")
+        f.write("{truncated\n")
+    pipeline = compile_pipeline([Assign("ts", Fn("to_timestamp", P("event_time")))])
+    out_dir, quar_dir, ckpt = str(tmpdir / "lake"), str(tmpdir / "q"), str(tmpdir / "ckpt")
+
+    def ingest():
+        run_ingest(spark, str(src), EVENT_SCHEMA, pipeline, out_dir, ckpt,
+                   quar_dir).awaitTermination(120)
+
+    ingest()
+    assert ingest_counts(spark, out_dir, quar_dir) == (1, 1)
+    # drop the batch's commit record: the restart replays batch 0
+    for name in ("0", ".0.crc"):
+        os.remove(f"{ckpt}/commits/{name}")
+    ingest()
+    assert ingest_counts(spark, out_dir, quar_dir) == (1, 1)
+    table = LakeTable(spark, "default", out_dir, use_iceberg=False)
+    assert table.snapshot_ids() == [0]
+    assert table.read().count() == 1

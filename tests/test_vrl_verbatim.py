@@ -302,7 +302,7 @@ def test_map_to_struct_schema_cast(spark):
             )
         ]
     )
-    good, bad = apply_schema(df, schema)
+    good, bad, _ = apply_schema(df, schema)
     assert bad.count() == 0
     row = good.collect()[0]["login"].asDict()
     assert row == {"type": "google_password", "timestamp": 171}
