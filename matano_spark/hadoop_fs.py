@@ -56,6 +56,12 @@ def delete(spark: SparkSession, path: str, recursive: bool = True) -> None:
     fs.delete(p, recursive)
 
 
+def modified(spark: SparkSession, path: str) -> float:
+    """Modification time of `path`, in seconds since the epoch."""
+    fs, p = fs_path(spark, path)
+    return fs.getFileStatus(p).getModificationTime() / 1000
+
+
 def glob(spark: SparkSession, pattern: str) -> list[str]:
     """Paths matching the Hadoop glob `pattern` ([] when none does).
     The listing crosses py4j as one string, not as a call per entry."""

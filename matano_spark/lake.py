@@ -116,6 +116,8 @@ def _union_schema(old: T.StructType, new: T.StructType) -> T.StructType:
 
 class LakeTable:
     MAX_COMMIT_RETRIES = 20
+    # Iceberg's remove_orphan_files default (older_than: 3 days)
+    ORPHAN_AGE_S = 3 * 24 * 3600
 
     def __init__(
         self,
@@ -350,10 +352,9 @@ class LakeTable:
         field yield typed nulls for it — the evolution semantics
         Iceberg provides from its own metadata."""
         if self.iceberg:
-            reader = self.spark.read
             if at_snapshot is not None:
-                reader = reader.option("snapshot-id", at_snapshot)
-            return reader.table(self.name)
+                raise ValueError("at_snapshot reads the parquet path's manifests")
+            return self.spark.read.table(self.name)
         m = self.snapshot(at_snapshot)
         if m is None:
             raise FileNotFoundError(f"no snapshot at {self.path}")
@@ -394,20 +395,31 @@ class LakeTable:
 
     def expire_snapshots(self, keep_last: int = 1) -> dict:
         """M2 (VACUUM / expire_snapshots): drop the manifests beyond the
-        `keep_last` latest, then delete every data file no retained
-        manifest lists — the orphan sweep that frees the files
-        overwrites, merges and compactions superseded."""
+        `keep_last` latest and delete the data files only they listed —
+        the files overwrites, merges and compactions superseded.
+
+        A file no manifest lists belongs to a commit in flight, or to a
+        writer that died between moving its files and publishing; it is
+        deleted, as is a staging directory, only once it is older than
+        ORPHAN_AGE_S, so a concurrent append keeps its rows."""
         ids = self.snapshot_ids()
         keep = ids[-keep_last:] if keep_last > 0 else []
         drop = ids[: len(ids) - len(keep)]
         live = {f for sid in keep for f in self.snapshot(sid)["files"]}
+        expired = {f for sid in drop for f in self.snapshot(sid)["files"]} - live
         for sid in drop:
             hadoop_fs.delete(self.spark, self._manifest_path(sid), False)
+        cutoff = time.time() - self.ORPHAN_AGE_S
         removed = []
         for p, rel in self._data_files(self.path):
-            if rel not in live:
+            if rel in expired or (
+                rel not in live and hadoop_fs.modified(self.spark, p) < cutoff
+            ):
                 hadoop_fs.delete(self.spark, p, False)
                 removed.append(rel)
+        for p in hadoop_fs.glob(self.spark, f"{self.path}/_staging/*"):
+            if hadoop_fs.modified(self.spark, p) < cutoff:
+                hadoop_fs.delete(self.spark, p)
         return {
             "expired_snapshots": drop,
             "removed_files": sorted(removed),

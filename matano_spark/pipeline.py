@@ -153,18 +153,20 @@ def land(
     `table`; returns (rows in, rows sidelined).
 
     Unreadable lines (CORRUPT_COL set and no field parsed) are split
-    off, the rest is transformed, projected to `schema` (None: the
-    transform's output is the table schema) and cast to it; rows that
-    cannot coerce are split off as well. The landing job counts both
-    sides. Sidelined rows go to `quarantine` only when there are any:
-    a batch run appends them, and a streaming batch (`epoch` = (stream
-    id, batch id)) overwrites its own `epoch=<stream id>.<batch id>`
-    directory, so a replay writes them once — as the table, which
-    lands a replayed batch's rows once."""
+    off; a record with one field of another type is readable and lands
+    with that field null. The rest is transformed, projected to
+    `schema` (None: the transform's output is the table schema) and
+    cast to it; rows that cannot coerce are split off as well. The
+    landing job counts both sides. Sidelined rows go to `quarantine`
+    only when there are any: a batch run appends them, and a streaming
+    batch (`epoch` = (stream id, batch id)) overwrites its own
+    `epoch=<stream id>.<batch id>` directory, so a replay writes them
+    once — as the table, which lands a replayed batch's rows once."""
     # A syntax error leaves every field null. A record with a field of
-    # another type also fills CORRUPT_COL but keeps its other fields (a
-    # multi-table pack's record for another table): it is readable, and
-    # the mismatched field is null.
+    # another type also fills CORRUPT_COL but keeps its other fields: it
+    # is readable, lands with that field null, and the transform decides
+    # whether it belongs to this table (a multi-table pack's record for
+    # another table has other field types and is dropped there).
     unreadable = reduce(
         operator.and_,
         [F.col(f"`{c}`").isNull() for c in raw.columns if c != CORRUPT_COL],
@@ -191,20 +193,17 @@ def land(
     committed = table.append(good, epoch) is not None
     n_in, n_bad, n_unread = _landed_counts(committed, lines, rows, good, bad, unread)
     if quarantine is not None and n_bad + n_unread:
-        # a false literal filter prunes a kind with no rows together with
-        # its branch, so unreadable lines alone do not rerun the transform
-        sidelined = (
-            bad.where(F.lit(n_bad > 0))
-            .withColumn("error_kind", F.lit("schema_mismatch"))
-            .unionByName(
-                unread.where(F.lit(n_unread > 0)).select(
-                    F.col(CORRUPT_COL).alias("raw"),
-                    F.lit("parse_error").alias("error_kind"),
-                ),
-                allowMissingColumns=True,
-            )
-            .withColumn("log_source", F.lit(log_source))
-        )
+        sides = []
+        if n_bad:
+            sides.append(bad.withColumn("error_kind", F.lit("schema_mismatch")))
+        if n_unread:  # without a mismatch side the transform does not rerun
+            sides.append(unread.select(
+                F.col(CORRUPT_COL).alias("raw"),
+                F.lit("parse_error").alias("error_kind"),
+            ))
+        sidelined = reduce(
+            lambda a, b: a.unionByName(b, allowMissingColumns=True), sides
+        ).withColumn("log_source", F.lit(log_source))
         if epoch is None:
             sidelined.write.mode("append").parquet(quarantine)
         else:

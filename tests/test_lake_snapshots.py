@@ -51,6 +51,33 @@ def test_overwrite_keeps_history_until_expiry(spark, tmp_path):
         t.read(at_snapshot=0)
 
 
+def test_expiry_spares_a_commit_in_flight(spark, tmp_path):
+    """An append whose files are under the root but whose manifest is
+    not yet published keeps its files through an expiry; such files and
+    a dead writer's staging directory go once they are old."""
+    import os
+
+    t = _table(spark, tmp_path / "t")
+    t.append(_rows(spark, [1], 10))
+    t.overwrite(_rows(spark, [2], 10))
+    in_flight = t._land(_rows(spark, [3], 11))["files"]
+    staging = tmp_path / "t" / "_staging" / "dead"
+    staging.mkdir(parents=True)
+    res = t.expire_snapshots(keep_last=1)
+    assert res["expired_snapshots"] == [0]
+    assert not set(in_flight) & set(res["removed_files"])
+    assert all((tmp_path / "t" / f).exists() for f in in_flight)
+    assert staging.exists()
+
+    old = 1_000_000_000  # 2001
+    for path in [tmp_path / "t" / f for f in in_flight] + [staging]:
+        os.utime(path, (old, old))
+    res = t.expire_snapshots(keep_last=1)
+    assert res["removed_files"] == sorted(in_flight)
+    assert not staging.exists()
+    assert {r["id"] for r in t.read().collect()} == {2}
+
+
 def test_compact_rewrites_to_one_dir_same_rows(spark, tmp_path):
     """Three appends to one hour leave three files; compaction rewrites
     them into one file of the same rows."""

@@ -186,3 +186,35 @@ def test_batch_and_stream_land_the_same_rows(spark, tmpdir):
     assert len(rows(stream_lake)) == 3
     assert ingest_counts(spark, str(tmpdir / "stream"), str(tmpdir / "stream_q"))[1] \
         == batch.rows_sidelined == 1
+
+
+def test_mistyped_field_lands_with_that_field_null(spark, tmpdir):
+    """A record with one field of another type (client as a string, not
+    an object) keeps its other fields: batch and stream both land it
+    with that field null and sideline nothing."""
+    from matano_spark.schema.config import load_log_source
+    from matano_spark.schema.resolve import fields_to_structtype
+    from matano_spark.streaming.ingest import ingest_counts, run_ingest
+
+    (tmpdir / "raw").mkdir()
+    mistyped = dict(OKTA_EVENTS[1], client="10.0.0.9")
+    (tmpdir / "raw" / "okta.json").write_text(
+        json.dumps(OKTA_EVENTS[0]) + "\n" + json.dumps(mistyped) + "\n"
+    )
+    batch = run_log_source(
+        spark, str(ROOT / "okta"), str(tmpdir / "raw"), str(tmpdir / "lake"),
+        quarantine_root=str(tmpdir / "q"),
+    )["system"]
+    assert (batch.rows_in, batch.rows_out, batch.rows_sidelined) == (2, 2, 0)
+    td = load_log_source(str(ROOT / "okta"))[0]
+    run_ingest(
+        spark, str(tmpdir / "raw"), fields_to_structtype(td.ingest["input_fields"]),
+        td.pipeline, str(tmpdir / "stream"), str(tmpdir / "ckpt"),
+        str(tmpdir / "stream_q"), log_source="okta",
+    ).awaitTermination(120)
+    assert ingest_counts(spark, str(tmpdir / "stream"), str(tmpdir / "stream_q")) \
+        == (2, 0)
+
+    for lake in (batch.read(), spark.read.parquet(str(tmpdir / "stream"))):
+        got = {r[0]: r[1] for r in lake.select("event.id", "source.ip").collect()}
+        assert got == {"u0": "10.0.0.0", "u1": None}
