@@ -32,10 +32,12 @@ The table's contents are what `read` returns: the files of one manifest
 the root equals it only while the table is append-only, because files
 superseded by `overwrite`, `merge_by_key` or `compact` stay on disk
 until `expire_snapshots` deletes them. `read` scans the root with the
-manifest's schema and keeps the listed files by name, a file-level
-filter Spark applies while planning: no schema-inference job, no
-listing job for explicit paths, and hour filters still reach the scan
-as partition filters.
+manifest's schema and a `pathGlobFilter` naming the listed files, which
+Spark applies to file names while it lists the root: no
+schema-inference job, no listing job for explicit paths, no per-row
+filter, and hour filters still reach the scan as partition filters.
+Matching a file name against the glob costs time linear in the number
+of live files, so a table is best compacted before it holds thousands.
 
 File layout: every hour-partitioned write goes through `write_hours`,
 which lands ONE file per hour partition per commit — the reference's
@@ -134,6 +136,9 @@ class LakeTable:
         self.iceberg = (
             iceberg_available(spark) if use_iceberg is None else use_iceberg
         )
+        # the latest manifest this instance read or committed: manifests
+        # never change, so it stands until a later id appears
+        self._latest: dict | None = None
 
     # -- DDL ----------------------------------------------------------
     def ddl(self, schema) -> str:
@@ -156,11 +161,14 @@ class LakeTable:
         """The manifest of `snapshot_id` (the latest by default; None
         when the table has no commit). Raises KeyError for an expired or
         unknown id."""
-        if snapshot_id is None:
+        latest = snapshot_id is None
+        if latest:
             ids = self.snapshot_ids()
             if not ids:
                 return None
             snapshot_id = ids[-1]
+            if self._latest is not None and self._latest["id"] == snapshot_id:
+                return self._latest
         for _ in range(100):
             text = hadoop_fs.read_text(self.spark, self._manifest_path(snapshot_id))
             if text is None:
@@ -168,9 +176,13 @@ class LakeTable:
                     f"snapshot {snapshot_id} of {self.path} expired or never existed"
                 )
             try:
-                return json.loads(text)
+                manifest = json.loads(text)
             except ValueError:  # its writer is still writing it
                 time.sleep(0.01)
+                continue
+            if latest:
+                self._latest = manifest
+            return manifest
         raise RuntimeError(f"manifest {snapshot_id} of {self.path} stays unreadable")
 
     def _try_commit(self, manifest: dict) -> bool:
@@ -212,6 +224,7 @@ class LakeTable:
                 "epochs": epochs,
             }
             if self._try_commit(manifest):
+                self._latest = manifest
                 return manifest["id"]
         raise RuntimeError(
             f"snapshot commit on {self.path} lost {self.MAX_COMMIT_RETRIES} "
@@ -336,11 +349,11 @@ class LakeTable:
             schema = T.StructType(
                 list(schema.fields) + [T.StructField("ts_hour", T.StringType())]
             )
-        live = [f.rsplit("/", 1)[-1] for f in manifest["files"]]
+        live = ",".join(f.rsplit("/", 1)[-1] for f in manifest["files"])
         return (
             self.spark.read.schema(schema)
+            .option("pathGlobFilter", f"{{{live}}}")
             .parquet(self.path)
-            .filter(F.col("_metadata.file_name").isin(live))
         )
 
     def read(self, schema=None, at_snapshot: int | None = None) -> DataFrame:
