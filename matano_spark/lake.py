@@ -408,15 +408,16 @@ class LakeTable:
 
     def expire_snapshots(self, keep_last: int = 1) -> dict:
         """M2 (VACUUM / expire_snapshots): drop the manifests beyond the
-        `keep_last` latest and delete the data files only they listed —
-        the files overwrites, merges and compactions superseded.
+        `keep_last` latest (the latest always stays, as in Iceberg) and
+        delete the data files only they listed — the files overwrites,
+        merges and compactions superseded.
 
         A file no manifest lists belongs to a commit in flight, or to a
         writer that died between moving its files and publishing; it is
         deleted, as is a staging directory, only once it is older than
         ORPHAN_AGE_S, so a concurrent append keeps its rows."""
         ids = self.snapshot_ids()
-        keep = ids[-keep_last:] if keep_last > 0 else []
+        keep = ids[-max(keep_last, 1):]
         drop = ids[: len(ids) - len(keep)]
         live = {f for sid in keep for f in self.snapshot(sid)["files"]}
         expired = {f for sid in drop for f in self.snapshot(sid)["files"]} - live

@@ -49,6 +49,9 @@ def test_overwrite_keeps_history_until_expiry(spark, tmp_path):
     assert {r["id"] for r in t.read().collect()} == {9}
     with pytest.raises(KeyError):
         t.read(at_snapshot=0)
+    # the latest snapshot always stays, whatever keep_last asks
+    assert t.expire_snapshots(keep_last=0)["retained"] == [1]
+    assert {r["id"] for r in t.read().collect()} == {9}
 
 
 def test_expiry_spares_a_commit_in_flight(spark, tmp_path):
